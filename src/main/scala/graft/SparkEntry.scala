@@ -299,7 +299,7 @@ object SparkEntry {
     }),
 
     "q09_despike" -> ((s: SparkSession, dir: String) => {
-      // prune BEFORE the kernel: flatMapGroups is opaque to Catalyst, so
+      // prune BEFORE the kernel: it is opaque to Catalyst, so
       // unused columns (props is a fat string) would ride the shuffle and
       // the external-Row encode — measured 0.74 s vs 1.1 s at 10x sf0.1
       Cast.despike(t(s, dir, "events")

@@ -291,9 +291,8 @@ object Cast {
               valueCols: Seq[String], n1: Double = 2.0, n2: Double = 20.0,
               block: Int = 100, channelGroups: Int = 1,
               refExact: Boolean = false): DataFrame = {
-    // Caller note: flatMapGroups is opaque to Catalyst — prune df to the
-    // columns you need BEFORE calling, or every unused column rides the
-    // shuffle and the external-Row encode.
+    // Caller note: the kernel is opaque to Catalyst — prune df to the
+    // columns you need BEFORE calling (see KernelGuard.sortedGroups).
     //
     // channelGroups > 1 subdivides the work key to (cast, channel-group):
     // the two-pass recurrence is per-channel independent, so each group's
@@ -304,13 +303,12 @@ object Cast {
     // 4 casts: 4 tasks ride 4 of 32 cores without it).
     if (channelGroups > 1 && valueCols.length > 1) {
       val g = math.min(channelGroups, valueCols.length)
-      val groups = valueCols.zipWithIndex.groupBy(_._2 % g).toSeq
-        .sortBy(_._1).map(_._2.map(_._1))
+      val groups = (0 until g).map(k => valueCols.indices.filter(_ % g == k).map(valueCols))
       val keyCols = Seq(castCol, orderCol)
       // cache the input ONCE: each group's skinny kernel and the scaffold
       // would otherwise re-evaluate the full upstream lineage (for the
-      // ctd source: a per-group re-parse — BenchDespikeWide A/B on the
-      // 4-cast 26-channel fixture: re-parse 6.6-6.9 s vs snapshot
+      // ctd source: a per-group re-parse — A/B on the 4-cast
+      // 26-channel fixture: re-parse 6.6-6.9 s vs snapshot
       // 5.3-5.5 s). MEMORY_AND_DISK, NOT localCheckpoint (same wall in
       // the same A/B): a cache keeps lineage, so a lost executor
       // recomputes the blocks instead of killing the job — the property
@@ -326,8 +324,8 @@ object Cast {
       }
       val scaffold = src.drop(valueCols: _*)
       // null-safe join keys (<=>): the single-group kernel keeps rows with
-      // a NULL cast id (the NUL-sentinel group) and NULL order values (nulls-
-      // first sort) — a plain equi-join would silently drop them here.
+      // a NULL cast id (its own group) and NULL order values (nulls-first
+      // sort) — a plain equi-join would silently drop them here.
       // (castCol, orderCol) uniqueness per row is still required.
       val joined = parts.foldLeft(scaffold) { (acc, p) =>
         val pr = keyCols.foldLeft(p)((d, k) => d.withColumnRenamed(k, s"__g_$k"))
@@ -343,72 +341,23 @@ object Cast {
     // slower per core than this fused primitive loop on the 4-cast
     // 330k-row QC-chain benchmark (BenchChain; the reference's numpy
     // stride-tricks rolling is the same O(n*w) in C). One shuffle on
-    // castCol, parallelism = cast count — exactly the property that
-    // scales at 100 TB. The kernel replicates Spark's own Average and
-    // CentralMomentAgg (stddev_pop) update recurrences operation-for-
-    // operation, so results are bit-identical to the windowed plan
+    // castCol (none over a scan bucketed on it), parallelism = cast
+    // count — exactly the property that scales at 100 TB. The kernel
+    // replicates Spark's own Average and CentralMomentAgg (stddev_pop)
+    // update recurrences operation-for-operation, so results are
+    // bit-identical to the windowed plan
     // (`despikeWindowed`, kept below; DespikeParitySpec pins equality and
     // the q09 DuckDB oracle is unchanged).
     val schema  = df.schema
-    val castIdx = schema.fieldIndex(castCol)
-    val ordIdx  = schema.fieldIndex(orderCol)
     val valIdx  = valueCols.map(schema.fieldIndex).toArray
     // flagged cells become null regardless of the column's declared
     // nullability (same schema change the windowed `when` produced)
     val outSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
       f => if (valueCols.contains(f.name)) f.copy(nullable = true) else f))
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    // Sort parity with despikeWindowed's Window.orderBy(col(orderCol)):
-    // ascending NULLS FIRST over ANY orderable type — numerics (doubles
-    // with Spark's NaN-greatest / -0.0==0.0 rule), strings (UTF8 binary
-    // order, not UTF-16), timestamps/dates (Comparable). A stable
-    // TimSort keeps tie order deterministic.
-    val ordType = schema(ordIdx).dataType
-    val cmpNonNull: (Any, Any) => Int = ordType match {
-      case org.apache.spark.sql.types.DoubleType => (a, b) => {
-        val x = a.asInstanceOf[Number].doubleValue()
-        val y = b.asInstanceOf[Number].doubleValue()
-        if (x == y) 0 else java.lang.Double.compare(x, y)
-      }
-      case org.apache.spark.sql.types.FloatType => (a, b) => {
-        val x = a.asInstanceOf[Number].floatValue()
-        val y = b.asInstanceOf[Number].floatValue()
-        if (x == y) 0 else java.lang.Float.compare(x, y)
-      }
-      case org.apache.spark.sql.types.StringType => (a, b) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String]))
-      case _ => (a, b) => a match {
-        case c: Comparable[_] => c.asInstanceOf[Comparable[Any]].compareTo(b)
-        case other => throw new IllegalArgumentException(
-          s"despike: unorderable order value $other (${ordType.catalogString})")
-      }
-    }
-    val rowCmp = new java.util.Comparator[org.apache.spark.sql.Row]
-        with java.io.Serializable {
-      override def compare(r1: org.apache.spark.sql.Row,
-                           r2: org.apache.spark.sql.Row): Int = {
-        val a = r1.get(ordIdx); val b = r2.get(ordIdx)
-        if (a == null && b == null) 0
-        else if (a == null) -1
-        else if (b == null) 1
-        else cmpNonNull(a, b)
-      }
-    }
-    // collision-free group key: a NULL cast id must stay a distinct
-    // partition from the literal string "null" (despikeWindowed's
-    // partitionBy keeps them apart)
-    val maxGroupRows = KernelGuard.maxGroupRows(df)
-    df.groupByKey { r =>
-        val v = r.get(castIdx)
-        if (v == null) "\u0000" else "v:" + v
-      }(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val rows = KernelGuard.toArrayCapped(key, it, maxGroupRows, "despike")
-        java.util.Arrays.sort(rows, rowCmp)
+    // the helper's sort is the Window.orderBy(col(orderCol)) order
+    // despikeWindowed uses, over ANY orderable order column
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), outSchema, "despike") {
+      rows =>
         val n = rows.length
         val idx0 = math.max(0, n - block) // last full-window start (0-based)
         // forward-window mean/stddev_pop at every row of (v, vNull),
@@ -614,7 +563,7 @@ object Cast {
             org.apache.spark.sql.Row.fromSeq(cells.toIndexedSeq)
           }
         }
-      }
+    }
   }
 
   /** The declarative window formulation of [[despike]] — retained as the

@@ -504,7 +504,7 @@ object EventOps {
    *
    * The recurrence is order-sensitive, so this is a sequential kernel in
    * the [[graft.ops.SeqOps]] family, NOT a window function: one shuffle on
-   * `keyCol` (`groupByKey` → in-memory sort on `(tsCol, tieCol)` →
+   * `keyCol` ([[KernelGuard.sortedGroups]], sorted on `(tsCol, tieCol)` →
    * linear fold), parallelism from key count. Per-key event counts are
    * bounded (10^3..10^6); both engines evaluate `alpha*x + beta*prev`
    * with the same IEEE ops in the same order, so a recursive-CTE oracle
@@ -519,32 +519,14 @@ object EventOps {
       s"ewma: alpha must be in (0, 1], got $alpha")
     val beta = 1.0 - alpha
     val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val tsIdx  = schema.fieldIndex(tsCol)
-    val tieIdx = schema.fieldIndex(tieCol)
     val valIdx = schema.fieldIndex(valueCol)
     val outSchema = org.apache.spark.sql.types.StructType(
       schema.fields :+ org.apache.spark.sql.types.StructField(
         out, org.apache.spark.sql.types.DoubleType, nullable = true))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    def asLong(v: Any): Long = v match {
-      case null => Long.MinValue
-      case n: java.lang.Number => n.longValue()
-      case t: java.sql.Timestamp => t.getTime * 1000L + t.getNanos / 1000 % 1000
-      case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000
-      case l: java.time.LocalDateTime => // TIMESTAMP_NTZ; only the ORDER
-        // matters here, and the UTC mapping is monotonic
-        l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000
-      case other => throw new IllegalArgumentException(
-        s"ewma: unsupported order value $other")
-    }
-    // prefix disambiguates a NULL key from the literal string "null"
-    // (the classic dirty-data artifact) — they must fold as two series
-    df.groupByKey(r =>
-        if (r.isNullAt(keyIdx)) "\u0000" else "v" + String.valueOf(r.get(keyIdx)))(
-        org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(r => (asLong(r.get(tsIdx)), asLong(r.get(tieIdx))))
+    // a NULL key folds apart from the literal string "null" (the classic
+    // dirty-data artifact); NULL timestamps sort first
+    KernelGuard.sortedGroups(df, keyCol, Seq(tsCol, tieCol), outSchema, "ewma") {
+      rows =>
         var state: java.lang.Double = null
         rows.iterator.map { r =>
           r.get(valIdx) match {
@@ -557,6 +539,6 @@ object EventOps {
           }
           org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (state: Any))
         }
-      }
+    }
   }
 }

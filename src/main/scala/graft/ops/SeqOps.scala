@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.dsp.{Butterworth, FiltFilt, Interp, Kernels}
@@ -8,12 +8,13 @@ import graft.dsp.{Butterworth, FiltFilt, Interp, Kernels}
 /**
  * Per-cast SEQUENTIAL kernels — operators whose recurrence cannot be
  * expressed as a Spark window function (IIR filtering, boundary-reflected
- * convolution, regridding). Each shuffles once on `castCol`
- * (`groupByKey(cast)`), sorts the 10^3-10^4 rows of one cast in memory, and
- * runs a pure `graft.dsp` kernel; parallelism comes from cast count, which is
- * what scales at 100 TB (SURVEY §2.5). All are optimization barriers — apply
- * filters/projections BEFORE these ops so Catalyst can push them into the
- * scan.
+ * convolution, regridding). Each runs through [[KernelGuard.sortedGroups]]:
+ * one shuffle on `castCol` (none over a scan bucketed on it), Spark sorts
+ * the 10^3-10^4 rows of one cast by `orderCol` (NULLS FIRST), and a pure
+ * `graft.dsp` kernel runs over them; parallelism comes from cast count,
+ * which is what scales at 100 TB (SURVEY §2.5). All are optimization
+ * barriers — apply filters/projections BEFORE these ops so Catalyst can
+ * push them into the scan.
  *
  * Null discipline: sensor nulls enter kernels as NaN (numpy semantics —
  * e.g. an IIR filter smears a NaN forward, exactly like the reference) and
@@ -27,9 +28,6 @@ object SeqOps {
     case other     => throw new IllegalArgumentException(s"non-numeric value $other")
   }
 
-  /** Sort key for scan order (int/long/double columns all fine). */
-  private def orderOf(r: Row, i: Int): Double = numAt(r, i)
-
   private def box(d: Double): Any =
     if (java.lang.Double.isNaN(d)) null else java.lang.Double.valueOf(d)
 
@@ -38,29 +36,23 @@ object SeqOps {
   private def perCastColumns(df: DataFrame, castCol: String, orderCol: String,
                              valueCols: Seq[String])(
                              kernel: Array[Double] => Array[Double]): DataFrame = {
-    val schema  = df.schema
-    val castIdx = schema.fieldIndex(castCol)
-    val ordIdx  = schema.fieldIndex(orderCol)
-    val valIdx  = valueCols.map(schema.fieldIndex)
-    implicit val enc = Encoders.row(schema)
-    val maxGroupRows = KernelGuard.maxGroupRows(df)
-    df.groupByKey(r => String.valueOf(r.get(castIdx)))(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val rows = KernelGuard.toArrayCapped(key, it, maxGroupRows, "perCastColumns")
-          .sortBy(orderOf(_, ordIdx))
-        val replaced: Map[Int, Array[Double]] = valIdx.map { vi =>
-          vi -> kernel(rows.map(numAt(_, vi)))
-        }.toMap
-        rows.iterator.zipWithIndex.map { case (r, i) =>
-          val vals = Array.tabulate[Any](schema.length) { c =>
-            replaced.get(c) match {
-              case Some(ys) => box(ys(i))
-              case None     => r.get(c)
-            }
+    val schema = df.schema
+    val valIdx = valueCols.map(schema.fieldIndex)
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), schema,
+        "perCastColumns") { rows =>
+      val replaced: Map[Int, Array[Double]] = valIdx.map { vi =>
+        vi -> kernel(rows.map(numAt(_, vi)))
+      }.toMap
+      rows.iterator.zipWithIndex.map { case (r, i) =>
+        val vals = Array.tabulate[Any](schema.length) { c =>
+          replaced.get(c) match {
+            case Some(ys) => box(ys(i))
+            case None     => r.get(c)
           }
-          Row.fromSeq(vals.toIndexedSeq)
         }
+        Row.fromSeq(vals.toIndexedSeq)
       }
+    }
   }
 
   /**
@@ -94,32 +86,24 @@ object SeqOps {
                          pressure: String = "pressure"): DataFrame = {
     val schema  = df.schema
     val castIdx = schema.fieldIndex(castCol)
-    val ordIdx  = schema.fieldIndex(orderCol)
     val pIdx    = schema.fieldIndex(pressure)
     val valIdx  = valueCols.map(schema.fieldIndex)
     val outSchema = StructType(
       schema(castIdx) +: StructField(pressure, DoubleType) +:
         valueCols.map(StructField(_, DoubleType)))
-    implicit val enc = Encoders.row(outSchema)
-    val maxGroupRows = KernelGuard.maxGroupRows(df)
-    df.groupByKey(r => String.valueOf(r.get(castIdx)))(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val rows = KernelGuard.toArrayCapped(key, it, maxGroupRows, "bindataInterpolate")
-          .sortBy(orderOf(_, ordIdx))
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val xs = rows.map(numAt(_, pIdx))
-          val start = math.ceil(xs.head)
-          val stop  = math.floor(xs.last)
-          val nGrid = math.max(0, math.ceil((stop - start) / delta - 1e-12).toInt)
-          val grid  = Array.tabulate(nGrid)(k => start + k * delta)
-          val castVal = rows.head.get(castIdx)
-          val cols = valIdx.map(vi => Interp.linear(grid, xs, rows.map(numAt(_, vi)))).toArray
-          grid.iterator.zipWithIndex.map { case (g, k) =>
-            Row.fromSeq(castVal +: java.lang.Double.valueOf(g) +:
-              cols.map(c => box(c(k))).toIndexedSeq)
-          }
-        }
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), outSchema,
+        "bindataInterpolate") { rows =>
+      val xs = rows.map(numAt(_, pIdx))
+      val start = math.ceil(xs.head)
+      val stop  = math.floor(xs.last)
+      val nGrid = math.max(0, math.ceil((stop - start) / delta - 1e-12).toInt)
+      val grid  = Array.tabulate(nGrid)(k => start + k * delta)
+      val castVal = rows.head.get(castIdx)
+      val cols = valIdx.map(vi => Interp.linear(grid, xs, rows.map(numAt(_, vi)))).toArray
+      grid.iterator.zipWithIndex.map { case (g, k) =>
+        Row.fromSeq(castVal +: java.lang.Double.valueOf(g) +:
+          cols.map(c => box(c(k))).toIndexedSeq)
       }
+    }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 /**
  * Generic one-time bucketed landing: write any DataFrame as a sorted
  * bucketed parquet table so every later per-key pipeline (windows,
- * groupByKey chains) reads a scan that ALREADY satisfies its clustered
+ * per-cast kernels) reads a scan that ALREADY satisfies its clustered
  * distribution — zero exchanges per run instead of re-shuffling the corpus
  * every pipeline execution (the same pattern as `CtdRead.ingestBucketed`,
  * generalized beyond instrument files; PlanShapeSpec pins the

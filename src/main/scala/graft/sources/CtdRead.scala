@@ -78,12 +78,15 @@ object CtdRead {
   /**
    * Bucketed ingest: like [[ingest]], but lands the samples as a BUCKETED
    * table (`bucketBy(cast_id) sortBy(cast_id, scan_order)`). A bucketed scan
-   * already satisfies the clustered distribution every per-cast window /
-   * groupByKey operator requires, so the entire QC chain (split, despike,
-   * interpolate, lp_filter, ...) runs with ZERO exchanges after the one-time
+   * already satisfies the clustered distribution every per-cast operator
+   * requires, so a per-cast window chain, or a per-cast kernel
+   * ([[graft.ops.KernelGuard.sortedGroups]]: despike, lp_filter, ...) that
+   * reads the scan directly, runs with ZERO exchanges after the one-time
    * ingest — at 10^12 samples that is the difference between re-shuffling
-   * the corpus per pipeline run and never shuffling it again
-   * (PlanShapeSpec pins the exchange-free plan). Returns the re-read table.
+   * the corpus per pipeline run and never shuffling it again. A kernel's
+   * output no longer carries the bucket partitioning, so an operator fed BY
+   * a kernel re-exchanges once (PlanShapeSpec pins all three shapes).
+   * Returns the re-read table.
    */
   def ingestBucketed(spark: SparkSession, ftype: String, inPath: String,
                      table: String, buckets: Int = 8): DataFrame = {

@@ -15,8 +15,7 @@ import graft.ops.SimOps
  * BENCH_SCALING_r14.json (clamp probe section) cannot silently drift
  * from the code. The measured evidence at the boundaries (recall
  * trajectory past the shortlist clamp; candidates/query growth past the
- * cells clamp) lives in the scaling record, produced by
- * scripts/run_clamp_probe_r14.sh.
+ * cells clamp) lives in the scaling record.
  */
 class ClampEnvelopeSpec extends AnyFunSuite {
 

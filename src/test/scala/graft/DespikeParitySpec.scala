@@ -192,7 +192,7 @@ class DespikeParitySpec extends SparkTestBase {
       val msg = Option(e.getMessage).getOrElse("") +
         Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
           .map(_.getMessage).mkString(" ")
-      assert(msg.contains("maxGroupRows") && msg.contains("v:1"), msg)
+      assert(msg.contains("maxGroupRows") && msg.contains("cast_id=1"), msg)
       // SeqOps kernels share the guard
       val e2 = intercept[Exception] {
         graft.ops.SeqOps.smooth(rows, "cast_id", "scan_order",

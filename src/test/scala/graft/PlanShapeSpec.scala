@@ -46,10 +46,11 @@ class PlanShapeSpec extends SparkTestBase {
       "user_id", "event_id", Seq("value"))
     val plan = chained.queryExecution.executedPlan.toString
     // the sequential kernel (default despike — measured ~7x the windowed
-    // plan's throughput at block=100, BenchChain r10) groups on a
-    // serialized key, so the downstream window chain re-exchanges once on
-    // the cast column; the window ops after it still fuse onto that ONE
-    // exchange. 2 total, never 3.
+    // plan's throughput at block=100, BenchChain r10) hands its rows back
+    // through the object-serialize boundary, which hides its cast-column
+    // partitioning from the planner, so the downstream window chain
+    // re-exchanges once on the cast column; the window ops after it still
+    // fuse onto that ONE exchange. 2 total, never 3.
     assert(countOccurrences(plan, "Exchange hashpartitioning") == 2, plan)
   }
 
@@ -115,9 +116,9 @@ class PlanShapeSpec extends SparkTestBase {
     val bucketed = graft.sources.CtdRead.ingestBucketed(
       spark, "cnv", s"$dataDir/CTD_with_sigma_e00.cnv", table, buckets = 4)
     try {
-      // the WINDOW formulation composes with bucketing (the kernel
-      // despike's serialized group key cannot see the bucket layout —
-      // callers chaining from a bucketed scan use despikeWindowed)
+      // the WINDOW formulation composes with bucketing end to end (the
+      // kernel despike reads the bucketed scan without an exchange too,
+      // see below, but a window op fed BY a kernel re-exchanges once)
       val chained = Cast.interpolateIndex(
         Cast.despikeWindowed(bucketed, "cast_id", "scan_order",
           Seq("t068C"), 2, 20, 16),
@@ -127,6 +128,20 @@ class PlanShapeSpec extends SparkTestBase {
       // EnsureRequirements inserts NO shuffle for the whole window chain
       assert(countOccurrences(plan, "Exchange hashpartitioning") == 0, plan)
       assert(chained.count() > 0)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("bucketed ingest: kernel despike over the bucketed scan plans ZERO " +
+       "exchanges (typed grouping on the cast column sees the buckets)") {
+    val table = "bucketed_kernel_test"
+    val bucketed = graft.sources.CtdRead.ingestBucketed(
+      spark, "cnv", s"$dataDir/CTD_with_sigma_e00.cnv", table, buckets = 4)
+    try {
+      val out = Cast.despike(bucketed, "cast_id", "scan_order",
+        Seq("t068C"), 2, 20, 16)
+      val plan = out.queryExecution.executedPlan.toString
+      assert(countOccurrences(plan, "Exchange hashpartitioning") == 0, plan)
+      assert(out.count() > 0)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
