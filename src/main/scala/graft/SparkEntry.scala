@@ -90,7 +90,8 @@ object SparkEntry {
     // edgesViaWindow: the despike kernel blocks column pruning, so the
     // default mode's separate edges aggregate would re-run parse+despike
     // wholesale (measured: 4.5 s of the chain's 9.2 s at r15); the window
-    // mode derives the same edges from one upstream pass — bit-identical
+    // mode derives the same edges AND the empty bins from one upstream
+    // pass with no join (PlanShapeSpec pins one scan) — bit-identical
     // output (KernelSpec parity pin; q181/q181b goldens unchanged)
     (Cast.bindataAverage(dn, "cast_id", "scan_order", valueCols,
       delta = 1.0, keepEmpty = true, edgesViaWindow = true), valueCols)

@@ -238,24 +238,26 @@ final class CtdScanBuilder(conf: CtdDataSource.Conf, fullSchema: StructType)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
   private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Seq[Filter] = Nil
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (supported, rest) = filters.partition(CtdFilters.supported)
-    pushed = supported
+    pushed = supported.toSeq
     rest // Spark evaluates only these post-scan
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] = pushed.toArray
 
   override def build(): Scan =
     CtdScan(conf, fullSchema, required, pushed)
 }
 
+/** `filters` is a `Seq`, not an `Array`: the scan's value equality is what
+  * lets two identical ctd reads canonicalize equal (ReuseExchange). */
 final case class CtdScan(conf: CtdDataSource.Conf, fullSchema: StructType,
-                         required: StructType, filters: Array[Filter])
+                         required: StructType, filters: Seq[Filter])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -267,7 +269,7 @@ final case class CtdScan(conf: CtdDataSource.Conf, fullSchema: StructType,
     conf.files.map(f => CtdInputPartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    CtdReaderFactory(conf.ftype, conf.view, required, filters,
+    CtdReaderFactory(conf.ftype, conf.view, required, filters.toArray,
       skipCorrupt = conf.onCorrupt == "skip", maxFileBytes = conf.maxFileBytes)
 
   // surfaces onCorrupt=skip drops as a per-scan SQL metric (UI + listener
@@ -276,7 +278,7 @@ final case class CtdScan(conf: CtdDataSource.Conf, fullSchema: StructType,
     Array(new CtdSkippedFilesMetric)
 
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new CtdMicroBatchStream(conf, required, filters, checkpointLocation)
+    new CtdMicroBatchStream(conf, required, filters.toArray, checkpointLocation)
 }
 
 /** Sum-aggregated count of files dropped by `onCorrupt=skip` — the

@@ -144,15 +144,44 @@ class KernelSpec extends SparkTestBase {
       .toDF("cast_id", "scan_order", "pressure", "t090C")
       // b's edges: start=ceil(2.0)=2, end=floor(6.0)=6 -> 3 bins; the
       // 2.0 rows sit ON start (dropped) and 6.0 has k=3 >= nbins=3
-    for (keepEmpty <- Seq(true, false)) {
-      val a = Cast.bindataAverage(rows, "cast_id", "scan_order",
-          Seq("t090C"), delta = 1.0, keepEmpty = keepEmpty)
-        .orderBy("cast_id", "pressure").collect().toSeq
-      val b = Cast.bindataAverage(rows, "cast_id", "scan_order",
-          Seq("t090C"), delta = 1.0, keepEmpty = keepEmpty,
-          edgesViaWindow = true)
-        .orderBy("cast_id", "pressure").collect().toSeq
-      assert(a == b, s"keepEmpty=$keepEmpty:\nrescan $a\nwindow $b")
+    // edge casts: c a NULL pressure mid-cast, d a NULL first pressure
+    // (no edges -> no bins), e a NULL last pressure, f a NULL value inside
+    // a bin and a bin whose only value is NULL, g an up-cast (nbins < 0),
+    // h nbins == 0 at delta 1; and a NULL cast id carrying a's samples
+    val edge = Seq[(String, Long, Option[Double], Option[Double])](
+        ("c", 1L, Some(0.4), Some(1.0)), ("c", 2L, Some(1.5), Some(2.0)),
+        ("c", 3L, None, Some(3.0)), ("c", 4L, Some(2.5), Some(4.0)),
+        ("c", 5L, Some(3.8), Some(5.0)),
+        ("d", 1L, None, Some(1.0)), ("d", 2L, Some(1.5), Some(2.0)),
+        ("d", 3L, Some(3.5), Some(3.0)),
+        ("e", 1L, Some(0.2), Some(1.0)), ("e", 2L, Some(1.5), Some(2.0)),
+        ("e", 3L, Some(3.5), Some(3.0)), ("e", 4L, None, Some(4.0)),
+        ("f", 1L, Some(0.1), Some(1.0)), ("f", 2L, Some(1.2), None),
+        ("f", 3L, Some(1.8), Some(3.0)), ("f", 4L, Some(2.5), None),
+        ("f", 5L, Some(4.9), Some(5.0)),
+        ("g", 1L, Some(5.5), Some(1.0)), ("g", 2L, Some(2.1), Some(2.0)),
+        ("h", 1L, Some(0.5), Some(1.0)), ("h", 2L, Some(2.2), Some(2.0)))
+      .toDF("cast_id", "scan_order", "pressure", "t090C")
+    val nullCast = rows.filter(col("cast_id") === "a")
+      .withColumn("cast_id", lit(null).cast("string"))
+    val all = rows.union(edge).union(nullCast)
+    for (delta <- Seq(1.0, 0.5); keepEmpty <- Seq(true, false)) {
+      def run(windowed: Boolean) =
+        Cast.bindataAverage(all, "cast_id", "scan_order", Seq("t090C"),
+            delta = delta, keepEmpty = keepEmpty, edgesViaWindow = windowed)
+          .orderBy("cast_id", "pressure").collect().toSeq
+      val a = run(windowed = false)
+      val b = run(windowed = true)
+      assert(a == b,
+        s"delta=$delta keepEmpty=$keepEmpty:\nrescan $a\nwindow $b")
+      // a NULL cast id is one cast: its bins equal the same samples' bins
+      // under a real id, in both modes
+      for ((out, mode) <- Seq((a, "rescan"), (b, "window"))) {
+        val asA = out.filter(_.getString(0) == "a").map(_.toSeq.tail)
+        val asNull = out.filter(_.isNullAt(0)).map(_.toSeq.tail)
+        assert(asA.nonEmpty && asNull == asA,
+          s"$mode delta=$delta keepEmpty=$keepEmpty:\na $asA\nNULL $asNull")
+      }
     }
     // and on real data: the q181 anchor path's exact shape
     val raw = CtdRead.cnv(spark, s"$dataDir/CTD-spiked-unfiltered.cnv.bz2")

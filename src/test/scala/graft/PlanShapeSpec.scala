@@ -54,6 +54,50 @@ class PlanShapeSpec extends SparkTestBase {
     assert(countOccurrences(plan, "Exchange hashpartitioning") == 2, plan)
   }
 
+  test("QC chain (lpFilter -> despike -> pressCheck -> split.down -> " +
+       "windowed bindata) runs its upstream ONCE: one scan, no join") {
+    val raw = graft.sources.CtdRead.cnv(spark,
+      s"$dataDir/CTD-spiked-unfiltered.cnv.bz2")
+    val valueCols = raw.schema.fields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.DoubleType &&
+        f.name != "pressure" => f.name
+    }.toSeq
+    val lp = graft.ops.SeqOps.lpFilter(raw, "cast_id", "scan_order")
+    val d = Cast.despike(lp, "cast_id", "scan_order", valueCols,
+      n1 = 2.0, n2 = 20.0, block = 100)
+    val dn = Cast.split(Cast.pressCheck(d, "cast_id", "scan_order", valueCols),
+        "cast_id", "scan_order")
+      .filter(col("direction") === "down")
+    val out = Cast.bindataAverage(dn, "cast_id", "scan_order", valueCols,
+      delta = 1.0, edgesViaWindow = true)
+    val plan = out.queryExecution.executedPlan.toString
+    // exchanges: scan -> lpFilter, lpFilter -> despike, despike -> the
+    // window chain; the bin aggregate keys on the cast, so the windows'
+    // partitioning already satisfies it
+    assert(countOccurrences(plan, "BatchScan ctd") == 1, plan)
+    assert(countOccurrences(plan, "MapGroups") == 2, plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
+    assert(countOccurrences(plan, "Exchange hashpartitioning") == 3, plan)
+  }
+
+  test("two reads of one ctd source canonicalize equal: the shuffle of " +
+       "the second is a ReusedExchange") {
+    val raw = graft.sources.CtdRead.cnv(spark, s"$dataDir/CTD_with_sigma_e00.cnv")
+    val savedBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val a = raw.groupBy("cast_id").agg(max("pressure").as("p1"))
+      val b = raw.groupBy("cast_id").agg(max("pressure").as("p2"))
+      val plan = a.join(b, "cast_id").queryExecution.executedPlan.toString
+      assert(plan.contains("ReusedExchange"), plan)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBroadcast)
+      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
+    }
+  }
+
   test("exact dedup never keys a shuffle on the document body") {
     val docs = Seq((1L, "aaa"), (2L, "bbb"), (3L, "aaa")).toDF("doc_id", "text")
     // PHYSICAL plan: 'hashpartitioning' never prints in the logical plan,
