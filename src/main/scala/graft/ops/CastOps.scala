@@ -20,36 +20,6 @@ import org.apache.spark.sql.types.DoubleType
  */
 object Cast {
 
-  /** Input caches registered by `despike(channelGroups > 1)` — the
-    * MEMORY_AND_DISK snapshot that stops each channel group re-evaluating
-    * the upstream lineage. Held as STRONG references: Spark's CacheManager
-    * already pins the cached plan and its blocks until `unpersist` is
-    * called (ContextCleaner reclaims GC'd raw RDDs / localCheckpoints, NOT
-    * Dataset.persist entries), so a weak reference here would be cleared
-    * by the first GC after despike returns and the blocks would leak for
-    * the session lifetime with no handle left to release them. The queue
-    * pins nothing the CacheManager doesn't already pin; the release path
-    * below is the ONLY way these blocks are freed, so a long-lived driver
-    * looping wide despikes must call [[releaseDespikeSnapshots]] after
-    * materializing each batch. */
-  private val despikeSnapshots =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist (non-blocking) every input cache registered by
-    * `despike(channelGroups > 1)` in this JVM; returns the count.
-    * JVM-global by design — call between batches, not while a concurrent
-    * query still reads a snapshot (lineage is intact either way, so a
-    * too-early release only costs a recompute, never correctness). */
-  def releaseDespikeSnapshots(): Int = {
-    var n = 0
-    var d = despikeSnapshots.poll()
-    while (d != null) {
-      d.unpersist(blocking = false); n += 1
-      d = despikeSnapshots.poll()
-    }
-    n
-  }
-
   /** Rows with `pressure < 0` are above the waterline — drop them.
     * Reference: ctd/processing.py:21-25 (`remove_above_water`). */
   def removeAboveWater(df: DataFrame, pressure: String = "pressure"): DataFrame =
@@ -276,51 +246,11 @@ object Cast {
    */
   def despike(df: DataFrame, castCol: String, orderCol: String,
               valueCols: Seq[String], n1: Double = 2.0, n2: Double = 20.0,
-              block: Int = 100, channelGroups: Int = 1,
+              block: Int = 100,
               refExact: Boolean = false): DataFrame = {
     // Caller note: the kernel is opaque to Catalyst — prune df to the
     // columns you need BEFORE calling (see KernelGuard.sortedGroups).
     //
-    // channelGroups > 1 subdivides the work key to (cast, channel-group):
-    // the two-pass recurrence is per-channel independent, so each group's
-    // kernel output is bit-identical to the single-group run; results
-    // join back on (castCol, orderCol) — REQUIRES that pair to be unique
-    // per row (scan/line numbers are, by parse-time construction). Use
-    // when casts x channels >> casts ~ cores (the 26-channel QC chain on
-    // 4 casts: 4 tasks ride 4 of 32 cores without it).
-    if (channelGroups > 1 && valueCols.length > 1) {
-      val g = math.min(channelGroups, valueCols.length)
-      val groups = (0 until g).map(k => valueCols.indices.filter(_ % g == k).map(valueCols))
-      val keyCols = Seq(castCol, orderCol)
-      // cache the input ONCE: each group's skinny kernel and the scaffold
-      // would otherwise re-evaluate the full upstream lineage (for the
-      // ctd source: a per-group re-parse — A/B on the 4-cast
-      // 26-channel fixture: re-parse 6.6-6.9 s vs snapshot
-      // 5.3-5.5 s). MEMORY_AND_DISK, NOT localCheckpoint (same wall in
-      // the same A/B): a cache keeps lineage, so a lost executor
-      // recomputes the blocks instead of killing the job — the property
-      // that matters on a preemptible 1000-executor fleet. Blocks live
-      // until the caller releases them (see [[releaseDespikeSnapshots]]);
-      // a long-lived driver looping despike(channelGroups>1) should call
-      // it between batches.
-      val src = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      despikeSnapshots.add(src)
-      val parts = groups.map { gc =>
-        despike(src.select((keyCols ++ gc).map(col): _*), castCol, orderCol,
-          gc, n1, n2, block, refExact = refExact)
-      }
-      val scaffold = src.drop(valueCols: _*)
-      // null-safe join keys (<=>): the single-group kernel keeps rows with
-      // a NULL cast id (its own group) and NULL order values (nulls-first
-      // sort) — a plain equi-join would silently drop them here.
-      // (castCol, orderCol) uniqueness per row is still required.
-      val joined = parts.foldLeft(scaffold) { (acc, p) =>
-        val pr = keyCols.foldLeft(p)((d, k) => d.withColumnRenamed(k, s"__g_$k"))
-        acc.join(pr, keyCols.map(k => col(k) <=> col(s"__g_$k")).reduce(_ && _))
-          .drop(keyCols.map(k => s"__g_$k"): _*)
-      }
-      return joined.select(df.columns.map(col).toIndexedSeq: _*)
-    }
     // Execution strategy: a per-cast SEQUENTIAL kernel (the SeqOps
     // pattern), not a window plan. The sliding-frame rolling stats are
     // O(rows x block) arithmetic either way, but WindowExec re-aggregates
@@ -523,8 +453,7 @@ object Cast {
         // Bit-parity is untouched: each channel's arithmetic is
         // self-contained and lands in its own dropMask slot.
         val dropMask: Array[Array[Boolean]] =
-          if (valIdx.length > 1 && n.toLong * valIdx.length * block > (1L << 22)
-              && !"false".equals(System.getProperty("graft.despike.parallel"))) {
+          if (valIdx.length > 1 && n.toLong * valIdx.length * block > (1L << 22)) {
             val out = new Array[Array[Boolean]](valIdx.length)
             java.util.stream.IntStream.range(0, valIdx.length).parallel()
               .forEach(k => out(k) = channelMask(valIdx(k)))

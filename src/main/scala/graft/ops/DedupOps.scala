@@ -296,11 +296,9 @@ object DedupOps {
                        reference: DataFrame, refTextCol: String,
                        numHashes: Int = 64, bands: Int = 16,
                        shingleSize: Int = 3, threshold: Double = 0.7,
-                       maxRefBucket: Int = 0,
-                       shingleStorage: org.apache.spark.storage.StorageLevel =
-                         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
+                       maxRefBucket: Int = 0): DataFrame =
     nearDedupAgainstWithHandle(df, idCol, textCol, reference, refTextCol,
-      numHashes, bands, shingleSize, threshold, maxRefBucket, shingleStorage)._1
+      numHashes, bands, shingleSize, threshold, maxRefBucket)._1
 
   /**
    * Incremental-ingest NEAR dedup: keep only the rows of `df` whose text is
@@ -339,28 +337,23 @@ object DedupOps {
                        reference: DataFrame, refTextCol: String,
                        numHashes: Int = 64, bands: Int = 16,
                        shingleSize: Int = 3, threshold: Double = 0.7,
-                       maxRefBucket: Int = 0,
-                       shingleStorage: org.apache.spark.storage.StorageLevel =
-                         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, () => Unit) = {
-    val none = org.apache.spark.storage.StorageLevel.NONE
+                       maxRefBucket: Int = 0): (DataFrame, () => Unit) = {
     requireIdColFree(idCol)
     // internal names live in joins across BOTH frames — collision-proof
     // against both column sets (exactDedupAgainst convention)
     var refIdC = "__ref_id"
     while (df.columns.contains(refIdC) || reference.columns.contains(refIdC))
       refIdC += "_"
-    val stagedInc = df
+    val incSh = df
       .select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
       .filter(size(col("__sh")) > 0)
-    val stagedRef = reference
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val refSh = reference
       .select(xxhash64(col(refTextCol)).as(refIdC),
         shingles(col(refTextCol), shingleSize).as("__sh"))
       .filter(size(col("__sh")) > 0)
       .dropDuplicates(refIdC)
-    val incSh = if (shingleStorage == none) stagedInc
-                else stagedInc.persist(shingleStorage)
-    val refSh = if (shingleStorage == none) stagedRef
-                else stagedRef.persist(shingleStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val incBands = lshBands(incSh.select(col(idCol),
       minHashFromShingles(col("__sh"), numHashes).as("__sig")), idCol, "__sig", bands)
     val refBands = capBandBuckets(lshBands(refSh.select(col(refIdC),
@@ -375,10 +368,7 @@ object DedupOps {
       .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_ids"))
     val result = df.join(contaminated, Seq(idCol), "left_anti")
-    val unpersist: () => Unit =
-      if (shingleStorage == none) () => ()
-      else () => { incSh.unpersist(); refSh.unpersist(); () }
-    (result, unpersist)
+    (result, () => { incSh.unpersist(); refSh.unpersist(); () })
   }
 
   /**
@@ -711,11 +701,9 @@ object DedupOps {
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 64, bands: Int = 16,
                          shingleSize: Int = 3, threshold: Double = 0.7,
-                         maxBucket: Int = 0,
-                         shingleStorage: org.apache.spark.storage.StorageLevel =
-                           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
+                         maxBucket: Int = 0): DataFrame =
     nearDuplicatePairsWithHandle(df, idCol, textCol, numHashes, bands,
-      shingleSize, threshold, maxBucket, shingleStorage)._1
+      shingleSize, threshold, maxBucket)._1
 
   /**
    * Like [[nearDuplicatePairs]] but also returns an `unpersist` handle for
@@ -724,17 +712,12 @@ object DedupOps {
    * corpus four times — but a cached table lives until session end, and
    * repeated invocations in a long-lived session would accumulate
    * corpus-sized caches. Call the handle once the result (and any dedup
-   * built on it) has materialized; pass `StorageLevel.NONE` to skip caching
-   * entirely (each downstream stage then recomputes the shingling — the
-   * right trade when the corpus outweighs available cache space and the job
-   * runs once).
+   * built on it) has materialized.
    */
   def nearDuplicatePairsWithHandle(df: DataFrame, idCol: String, textCol: String,
                                    numHashes: Int = 64, bands: Int = 16,
                                    shingleSize: Int = 3, threshold: Double = 0.7,
-                                   maxBucket: Int = 0,
-                                   shingleStorage: org.apache.spark.storage.StorageLevel =
-                                     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, () => Unit) = {
+                                   maxBucket: Int = 0): (DataFrame, () => Unit) = {
     requireIdColFree(idCol)
     // Stage the shingling ONCE: without it the self-join sides, plus both
     // jaccard sides, each re-derive shingles from the raw text — four corpus
@@ -746,11 +729,9 @@ object DedupOps {
     // cannot near-duplicate anything, and banding their all-MaxValue
     // signature would overflow the mod-P31 band fold (the oracle emits no
     // band rows for them — ADVICE r3).
-    val staged = df.select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
+    val sh = df.select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
       .filter(size(col("__sh")) > 0)
-    val sh =
-      if (shingleStorage == org.apache.spark.storage.StorageLevel.NONE) staged
-      else staged.persist(shingleStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withSig = sh.select(col(idCol),
       minHashFromShingles(col("__sh"), numHashes).as("__sig"))
     val bandsDf = capBandBuckets(lshBands(withSig, idCol, "__sig", bands),
@@ -780,11 +761,9 @@ object DedupOps {
   def nearDedup(df: DataFrame, idCol: String, textCol: String,
                 numHashes: Int = 64, bands: Int = 16,
                 shingleSize: Int = 3, threshold: Double = 0.7,
-                maxBucket: Int = 0,
-                shingleStorage: org.apache.spark.storage.StorageLevel =
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                maxBucket: Int = 0): DataFrame = {
     val losers = nearDuplicatePairs(df, idCol, textCol, numHashes, bands,
-      shingleSize, threshold, maxBucket, shingleStorage)
+      shingleSize, threshold, maxBucket)
       .select(col("id_b").as(idCol)).distinct()
     df.join(losers, Seq(idCol), "left_anti")
   }
@@ -941,14 +920,12 @@ object DedupOps {
                          numHashes: Int = 64, bands: Int = 16,
                          shingleSize: Int = 3, threshold: Double = 0.7,
                          maxBucket: Int = 0, maxIter: Int = 20,
-                         shingleStorage: org.apache.spark.storage.StorageLevel =
-                           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
                          localPairLimit: Int = 1 << 20,
                          ccAlgorithm: String = "auto"): DataFrame = {
     require(Set("auto", "minlabel", "stars")(ccAlgorithm),
       s"ccAlgorithm must be 'auto', 'minlabel' or 'stars', got '$ccAlgorithm'")
     val (pairs, done) = nearDuplicatePairsWithHandle(df, idCol, textCol,
-      numHashes, bands, shingleSize, threshold, maxBucket, shingleStorage)
+      numHashes, bands, shingleSize, threshold, maxBucket)
     // Scale-adaptive closure (the broadcast-vs-shuffle-join pattern): the
     // verified pair set is proportional to the DUPLICATE count, usually
     // orders of magnitude below the corpus — when it fits on the driver
@@ -1138,11 +1115,9 @@ object DedupOps {
                         numHashes: Int = 64, bands: Int = 16,
                         shingleSize: Int = 3, threshold: Double = 0.7,
                         maxBucket: Int = 0, maxIter: Int = 20,
-                        shingleStorage: org.apache.spark.storage.StorageLevel =
-                          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
                         localPairLimit: Int = 1 << 20): DataFrame = {
     val (pairs, done) = nearDuplicatePairsWithHandle(df, idCol, textCol,
-      numHashes, bands, shingleSize, threshold, maxBucket, shingleStorage)
+      numHashes, bands, shingleSize, threshold, maxBucket)
     val spark = df.sparkSession
     val idType = df.schema(idCol).dataType
     val idIsIntegral = idType match {
@@ -1817,35 +1792,28 @@ object DedupOps {
   def contaminatedIdsBloom(docs: DataFrame, idCol: String, textCol: String,
                            probes: DataFrame, probeTextCol: String,
                            shingleSize: Int = 13, fpp: Double = 0.01,
-                           expectedDistinctProbes: Long = 0L,
-                           probeStorage: org.apache.spark.storage.StorageLevel =
-                             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
+                           expectedDistinctProbes: Long = 0L): DataFrame =
     contaminatedIdsBloomWithHandle(docs, idCol, textCol, probes, probeTextCol,
-      shingleSize, fpp, expectedDistinctProbes, probeStorage)._1
+      shingleSize, fpp, expectedDistinctProbes)._1
 
   /** [[contaminatedIdsBloom]] plus an unpersist handle for the staged
     * probe-shingle cache (same contract as
     * [[nearDuplicatePairsWithHandle]]): call it after the result has
     * materialized, or repeated calls leak cached blocks for the session
-    * lifetime (ADVICE r6). No-op when `probeStorage` is `NONE`. */
+    * lifetime (ADVICE r6). */
   def contaminatedIdsBloomWithHandle(docs: DataFrame, idCol: String, textCol: String,
                            probes: DataFrame, probeTextCol: String,
                            shingleSize: Int = 13, fpp: Double = 0.01,
-                           expectedDistinctProbes: Long = 0L,
-                           probeStorage: org.apache.spark.storage.StorageLevel =
-                             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, () => Unit) = {
+                           expectedDistinctProbes: Long = 0L): (DataFrame, () => Unit) = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
     // stage the DISTINCT probe shingles once: sizing, the bloom build, and
     // the verify semi-join all read them — unstaged, the probe corpus would
     // be tokenized + shingled three times per call (same rationale as
-    // nearDuplicatePairsWithHandle's staged shingle table; pass
-    // StorageLevel.NONE to trade the cache for recomputation)
-    val staged = probes
+    // nearDuplicatePairsWithHandle's staged shingle table)
+    val probeSh = probes
       .select(explode(shingles(col(probeTextCol), shingleSize)).as("__sh"))
       .distinct()
-    val probeSh =
-      if (probeStorage == org.apache.spark.storage.StorageLevel.NONE) staged
-      else staged.persist(probeStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nEst =
       if (expectedDistinctProbes > 0) expectedDistinctProbes
       // the count materializes the cache AND is exact (it runs over the
@@ -1864,13 +1832,7 @@ object DedupOps {
       .where(sketchExprs.bloomMightContain(bloom, xxhash64(col("__sh"))))
     val result = candidates.join(probeSh, Seq("__sh"), "left_semi")
       .select(col(idCol)).distinct()
-    // branch on the STORAGE LEVEL, not reference equality: persist()
-    // returns `this`, so `probeSh eq staged` is true even when a cache WAS
-    // registered and the handle would silently never release it
-    val unpersist: () => Unit =
-      if (probeStorage == org.apache.spark.storage.StorageLevel.NONE) () => ()
-      else () => { probeSh.unpersist(); () }
-    (result, unpersist)
+    (result, () => { probeSh.unpersist(); () })
   }
 
   /**
@@ -2050,13 +2012,9 @@ object DedupOps {
     * corpus is referenced THREE times (gram document-frequency, the
     * semi-join back, the char-offset join), so it stages through one
     * persist — without it each reference re-scans and re-tokenizes the
-    * 100 TB table. Pass `StorageLevel.NONE` to opt out (the recompute
-    * trade); call the handle once the result is consumed. */
+    * 100 TB table. Call the handle once the result is consumed. */
   def duplicateSpansWithHandle(df: DataFrame, idCol: String, textCol: String,
-                               k: Int = 8, minDf: Int = 2,
-                               tokenStorage: org.apache.spark.storage.StorageLevel =
-                                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, () => Unit) = {
+                               k: Int = 8, minDf: Int = 2): (DataFrame, () => Unit) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minDf >= 2, s"minDf must be >= 2 (1 would flag every gram), got $minDf")
     requireIdColFree(idCol)
@@ -2067,12 +2025,10 @@ object DedupOps {
     val X = org.apache.spark.sql.catalyst.expressions.grafttext.TextKernelExpressions
     val toks = col("__toff").getField("toks")
     val n = size(toks)
-    val staged = df
+    val withT = df
       .select(col(idCol), X.tokenizeWithOffsets(col(textCol)).as("__toff"))
       .filter(n >= k)
-    val withT =
-      if (tokenStorage == org.apache.spark.storage.StorageLevel.NONE) staged
-      else staged.persist(tokenStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // native positional k-gram hash kernel (graftdedup.GramXxHashesExpr):
     // the interpreted transform/slice/array_join lambda this replaced ran
     // per position per row (the DSIR-kernel lesson)
@@ -2112,11 +2068,7 @@ object DedupOps {
         element_at(col("__toff").getField("ends"), col("tok_end").cast(IntegerType))
           .cast(LongType).as("char_end"),
         col("n_dup_grams"))
-    (result, () => {
-      if (tokenStorage != org.apache.spark.storage.StorageLevel.NONE) {
-        withT.unpersist(); ()
-      }
-    })
+    (result, () => { withT.unpersist(); () })
   }
 
   /**
@@ -2146,21 +2098,18 @@ object DedupOps {
                           out: String = "clean_text"): DataFrame =
     stripDuplicateSpansWithHandle(df, idCol, textCol, k, minDf, out)._1
 
-  /** [[stripDuplicateSpans]] plus the staged-token-cache unpersist handle
-    * (and the `StorageLevel.NONE` opt-out), threaded through from the
-    * underlying [[duplicateSpansWithHandle]] — the plain variant keeps
-    * the session-lifetime cache trade, which a per-crawl-batch caller in
-    * a long-lived session should NOT accept. */
+  /** [[stripDuplicateSpans]] plus the staged-token-cache unpersist handle,
+    * threaded through from the underlying [[duplicateSpansWithHandle]] —
+    * the plain variant keeps the session-lifetime cache trade, which a
+    * per-crawl-batch caller in a long-lived session should NOT accept. */
   def stripDuplicateSpansWithHandle(df: DataFrame, idCol: String,
                                     textCol: String, k: Int = 8, minDf: Int = 2,
-                                    out: String = "clean_text",
-                                    tokenStorage: org.apache.spark.storage.StorageLevel =
-                                      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                    out: String = "clean_text")
       : (DataFrame, () => Unit) = {
     require(!df.columns.contains(out),
       s"output column '$out' already exists — rename it first")
     val (spans, done) =
-      duplicateSpansWithHandle(df, idCol, textCol, k, minDf, tokenStorage)
+      duplicateSpansWithHandle(df, idCol, textCol, k, minDf)
     val spanText = df.select(col(idCol), col(textCol))
       .join(spans, Seq(idCol))
       .select(col(idCol), col("tok_start"), col("char_start"), col("char_end"),

@@ -725,23 +725,26 @@ object SimOps {
           distTo(chosen(0)).as("__dm"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var prevF: DataFrame = null
-      while (chosen.length < k) {
-        val next = dmF.orderBy(col("__dm").desc, col("vec_id")).limit(1)
-          .select(col(qCol)).head()
-        // dmF is fully materialized by the TakeOrdered above — its
-        // parent can go now without triggering recompute
-        if (prevF != null) { prevF.unpersist(); prevF = null }
-        val c = next.getSeq[Double](0).toArray
-        chosen += c
-        if (chosen.length < k) {
-          prevF = dmF
-          dmF = dmF.select(col("vec_id"), col(qCol),
-              least(col("__dm"), distTo(c)).as("__dm"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        while (chosen.length < k) {
+          val next = dmF.orderBy(col("__dm").desc, col("vec_id")).limit(1)
+            .select(col(qCol)).head()
+          // dmF is fully materialized by the TakeOrdered above — its
+          // parent can go now without triggering recompute
+          if (prevF != null) { prevF.unpersist(); prevF = null }
+          val c = next.getSeq[Double](0).toArray
+          chosen += c
+          if (chosen.length < k) {
+            prevF = dmF
+            dmF = dmF.select(col("vec_id"), col(qCol),
+                least(col("__dm"), distTo(c)).as("__dm"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          }
         }
+      } finally {
+        if (prevF != null) prevF.unpersist()
+        dmF.unpersist()
       }
-      if (prevF != null) prevF.unpersist()
-      dmF.unpersist()
     }
     chosen.toArray
   }
@@ -793,74 +796,77 @@ object SimOps {
         distsTo(Array(seed0)).as("__dm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var prevF: DataFrame = null
-    while (chosen.length < k) {
-      val cand = dmF.orderBy(col("__dm").desc, col("vec_id")).limit(m)
-        .collect()
-      // dmF is fully materialized by the TakeOrdered; parent can go
-      if (prevF != null) { prevF.unpersist(); prevF = null }
-      require(cand.nonEmpty, s"$caller: empty corpus")
-      if (cand(0).isNullAt(2)) {
-        // every distance null (nulls sort last in desc): the per-pass
-        // recurrence re-picks this same lowest-id row each remaining pass
-        val v = cand(0).getSeq[Double](1).toArray
-        while (chosen.length < k) chosen += v
-      } else {
-        val nAll = cand.length
-        var n = nAll
-        while (n > 0 && cand(n - 1).isNullAt(2)) n -= 1 // null tail
-        val ids = new Array[Long](n)
-        val vecs = new Array[Array[Double]](n)
-        val dm = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          ids(i) = cand(i).getLong(0)
-          vecs(i) = cand(i).getSeq[Double](1).toArray
-          dm(i) = cand(i).getDouble(2)
-          i += 1
-        }
-        // complete: fewer than m rows collected, or a null made the cut —
-        // either way every non-null-distance row is in the set
-        val complete = nAll < m || n < nAll
-        val t = dm(n - 1)
-        val batch = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-        var open = true
-        while (open && chosen.length < k) {
-          var best = 0
-          i = 1
+    try {
+      while (chosen.length < k) {
+        val cand = dmF.orderBy(col("__dm").desc, col("vec_id")).limit(m)
+          .collect()
+        // dmF is fully materialized by the TakeOrdered; parent can go
+        if (prevF != null) { prevF.unpersist(); prevF = null }
+        require(cand.nonEmpty, s"$caller: empty corpus")
+        if (cand(0).isNullAt(2)) {
+          // every distance null (nulls sort last in desc): the per-pass
+          // recurrence re-picks this same lowest-id row each remaining pass
+          val v = cand(0).getSeq[Double](1).toArray
+          while (chosen.length < k) chosen += v
+        } else {
+          val nAll = cand.length
+          var n = nAll
+          while (n > 0 && cand(n - 1).isNullAt(2)) n -= 1 // null tail
+          val ids = new Array[Long](n)
+          val vecs = new Array[Array[Double]](n)
+          val dm = new Array[Double](n)
+          var i = 0
           while (i < n) {
-            if (dm(i) > dm(best) || (dm(i) == dm(best) && ids(i) < ids(best)))
-              best = i
+            ids(i) = cand(i).getLong(0)
+            vecs(i) = cand(i).getSeq[Double](1).toArray
+            dm(i) = cand(i).getDouble(2)
             i += 1
           }
-          if (batch.nonEmpty && !complete && !(dm(best) > t)) {
-            open = false // unprovable pick: close the batch, re-collect
-          } else {
-            val c = vecs(best)
-            chosen += c
-            batch += c
-            if (chosen.length < k) {
-              var cc = 0.0
-              i = 0
-              while (i < c.length) { cc += c(i) * c(i); i += 1 }
-              i = 0
-              while (i < n) {
-                val d = intDistDriver(vecs(i), c, cc)
-                if (d < dm(i)) dm(i) = d
-                i += 1
+          // complete: fewer than m rows collected, or a null made the cut —
+          // either way every non-null-distance row is in the set
+          val complete = nAll < m || n < nAll
+          val t = dm(n - 1)
+          val batch = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+          var open = true
+          while (open && chosen.length < k) {
+            var best = 0
+            i = 1
+            while (i < n) {
+              if (dm(i) > dm(best) || (dm(i) == dm(best) && ids(i) < ids(best)))
+                best = i
+              i += 1
+            }
+            if (batch.nonEmpty && !complete && !(dm(best) > t)) {
+              open = false // unprovable pick: close the batch, re-collect
+            } else {
+              val c = vecs(best)
+              chosen += c
+              batch += c
+              if (chosen.length < k) {
+                var cc = 0.0
+                i = 0
+                while (i < c.length) { cc += c(i) * c(i); i += 1 }
+                i = 0
+                while (i < n) {
+                  val d = intDistDriver(vecs(i), c, cc)
+                  if (d < dm(i)) dm(i) = d
+                  i += 1
+                }
               }
             }
           }
-        }
-        if (chosen.length < k) {
-          prevF = dmF
-          dmF = dmF.select(col("vec_id"), col(qCol),
-              least(col("__dm"), distsTo(batch.toArray)).as("__dm"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          if (chosen.length < k) {
+            prevF = dmF
+            dmF = dmF.select(col("vec_id"), col(qCol),
+                least(col("__dm"), distsTo(batch.toArray)).as("__dm"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          }
         }
       }
+    } finally {
+      if (prevF != null) prevF.unpersist()
+      dmF.unpersist()
     }
-    if (prevF != null) prevF.unpersist()
-    dmF.unpersist()
     chosen.toArray
   }
 
@@ -1803,13 +1809,11 @@ object SimOps {
     * (id, vector) projection is referenced up to five times — the derive
     * count, the codebook collect, the cell assignment, and both verify
     * joins — so it stages through one persist; without it each reference
-    * re-runs the caller's upstream. `StorageLevel.NONE` opts out. */
+    * re-runs the caller's upstream. */
   def semanticDedupPairsWithHandle(corpus: DataFrame, idCol: String, vecCol: String,
                                    threshold: Double = 0.9, nCells: Int = 0,
                                    trainCodebook: Boolean = false, lloydIters: Int = 5,
-                                   trainSample: Int = 4096, maxCell: Int = 0,
-                                   vecStorage: org.apache.spark.storage.StorageLevel =
-                                     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                   trainSample: Int = 4096, maxCell: Int = 0)
       : (DataFrame, () => Unit) = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"threshold must be a cosine in [-1, 1], got $threshold")
@@ -1818,10 +1822,8 @@ object SimOps {
     require(!Set("id_a", "id_b", "cell", "cos_sim", "__cell", "__cn",
         "__va", "__vb").contains(idCol),
       s"idCol '$idCol' collides with a semanticDedup internal column — rename it first")
-    val staged = corpus.select(col(idCol), col(vecCol))
-    val vecs =
-      if (vecStorage == org.apache.spark.storage.StorageLevel.NONE) staged
-      else staged.persist(vecStorage)
+    val vecs = corpus.select(col(idCol), col(vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // r15: lifted-ceiling derive + two-level assignment past
     // FlatAssignMaxCells (see resolveAssigner — the 1000x-decade fix;
     // identical to the r14 flat path at every cell count <= 4096)
@@ -1870,11 +1872,7 @@ object SimOps {
       .observe(DedupOps.obsName(DedupOps.ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_pairs"))
       .select(col("id_a"), col("id_b"), col("__cell").as("cell"), col("cos_sim"))
-    (result, () => {
-      if (vecStorage != org.apache.spark.storage.StorageLevel.NONE) {
-        vecs.unpersist(); ()
-      }
-    })
+    (result, () => { vecs.unpersist(); () })
   }
 
   /** Semantic dedup: drop rows whose vector semantically duplicates a

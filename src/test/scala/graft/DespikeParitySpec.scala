@@ -123,61 +123,6 @@ class DespikeParitySpec extends SparkTestBase {
     assert(kern.exists(_.isNullAt(2)), "no spike was nulled")
   }
 
-  test("channelGroups > 1 is bit-identical to the single-group kernel " +
-       "(the per-channel recurrences are independent; join-back on the " +
-       "unique (cast, order) key)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(23)
-    val rows = (for {
-      cast <- 0 until 3
-      i    <- 0 until 120
-    } yield {
-      def ch(k: Int): java.lang.Double =
-        if ((i + k) % 41 == 0) 400.0 + k
-        else if (cast == 1 && i == 30 + k) null
-        else math.sin(i / (5.0 + k)) + rnd.nextGaussian() * 0.1
-      (cast.toLong, i.toLong, ch(0), ch(1), ch(2), ch(3), ch(4))
-    }).toDF("cast_id", "scan_order", "c0", "c1", "c2", "c3", "c4")
-    val cols = Seq("c0", "c1", "c2", "c3", "c4")
-    def collect(d: org.apache.spark.sql.DataFrame) = d
-      .orderBy("cast_id", "scan_order").collect().toSeq
-    val one = collect(Cast.despike(rows, "cast_id", "scan_order", cols,
-      n1 = 2.0, n2 = 6.0, block = 16))
-    val grouped = collect(Cast.despike(rows, "cast_id", "scan_order", cols,
-      n1 = 2.0, n2 = 6.0, block = 16, channelGroups = 3))
-    assert(grouped == one)
-    assert(one.exists(r => (2 until 7).exists(r.isNullAt)),
-      "no spike was nulled")
-    // column order preserved through the join-back
-    assert(Cast.despike(rows, "cast_id", "scan_order", cols,
-      channelGroups = 3).columns.toSeq == rows.columns.toSeq)
-  }
-
-  test("channelGroups > 1 keeps NULL cast-id and NULL order rows (null-safe " +
-       "join-back parity with the single-group kernel)") {
-    import spark.implicits._
-    val rows = (for {
-      cast <- Seq[java.lang.Long](null, 1L)
-      i    <- 0 until 40
-    } yield {
-      // one NULL order value per cast (pair uniqueness holds)
-      val ord: java.lang.Long = if (i == 7) null else i.toLong
-      def ch(k: Int): java.lang.Double =
-        if ((i + k) % 13 == 0) 300.0 + k else math.cos(i / (3.0 + k))
-      (cast, ord, ch(0), ch(1), ch(2), ch(3))
-    }).toDF("cast_id", "scan_order", "c0", "c1", "c2", "c3")
-    val cols = Seq("c0", "c1", "c2", "c3")
-    def collect(d: org.apache.spark.sql.DataFrame) = d
-      .orderBy(asc_nulls_first("cast_id"), asc_nulls_first("scan_order"))
-      .collect().toSeq
-    val one = collect(Cast.despike(rows, "cast_id", "scan_order", cols,
-      n1 = 2.0, n2 = 6.0, block = 8))
-    val grouped = collect(Cast.despike(rows, "cast_id", "scan_order", cols,
-      n1 = 2.0, n2 = 6.0, block = 8, channelGroups = 2))
-    assert(grouped.length == 80, s"null-key rows dropped: ${grouped.length}")
-    assert(grouped == one)
-  }
-
   test("a group exceeding graft.kernel.maxGroupRows refuses loudly, naming " +
        "the cast group (the one-cast-per-task OOM guard)") {
     import spark.implicits._

@@ -126,4 +126,19 @@ class MaximinTopMSpec extends SparkTestBase {
     val slow = SimOps.maximinPerPass(df, "__q", 3, s0)
     assertSame(out, slow, "ragged dispatch")
   }
+
+  test("a selection loop that throws leaves no persisted min-distance " +
+      "frame behind (both paths)") {
+    val empty = vecDf(Array.empty[Array[Double]], parts = 2)
+    val s0 = Array(1.0, 2.0)
+    val paths: Seq[(String, () => Array[Array[Double]])] = Seq(
+      "maximinPerPass" -> (() => SimOps.maximinPerPass(empty, "__q", 3, s0)),
+      "maximinBatched" -> (() => SimOps.maximinBatched(empty, "__q", 3, s0, "spec")))
+    val leaked = paths.map { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[Exception](run())
+      name -> (spark.sparkContext.getPersistentRDDs.keySet -- before)
+    }.filter(_._2.nonEmpty)
+    assert(leaked.isEmpty, s"persisted RDDs survive the failure: $leaked")
+  }
 }

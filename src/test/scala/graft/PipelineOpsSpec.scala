@@ -702,6 +702,58 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(after.isEmpty, s"lingering cached RDDs after unpersist handle: $after")
   }
 
+  test("every *WithHandle op caches its staged input while the result is " +
+       "in use, and its handle leaves no cached blocks") {
+    // inputs no other test caches: a plan another test left cached would
+    // make persist() a no-op here and hide the cache under test
+    val text = "release handles free the staged cache of every dedup op"
+    val pairDocs = Seq((0L, text), (1L, text + " today"),
+      (2L, "completely unrelated content about parquet footer caching"))
+      .toDF("doc_id", "text")
+    val landed = Seq((0L, text), (1L, "landed corpus row about ocean casts"))
+      .toDF("ref_id", "body")
+    val incoming = Seq((10L, text + " extra"),
+      (12L, "completely unrelated content about parquet footer caching"))
+      .toDF("doc_id", "text")
+    val probeDocs = Seq((0L, "alpha beta gamma delta zeta"),
+      (1L, "totally different words here now")).toDF("doc_id", "text")
+    val probes = Seq("alpha beta gamma delta zeta").toDF("text")
+    val shared = (0 until 10).map(i => s"shared$i").mkString(" ")
+    val spanDocs = Seq((0L, s"alpha0 alpha1 $shared beta0"),
+      (1L, s"gamma0 $shared delta0 delta1"),
+      (2L, "untouched document with its own words")).toDF("doc_id", "text")
+    // ten distinct directions plus one exact copy of vector 0
+    val vecs = ((0 until 10).map(i => (i.toLong, Seq(math.cos(i * 0.3), math.sin(i * 0.3)))) :+
+      ((100L, Seq(1.0, 0.0)))).toDF("vec_id", "embedding")
+    // (op, cached stages it must hold while in use, rows it must return)
+    val cases: Seq[(String, () => (org.apache.spark.sql.DataFrame, () => Unit), Int, Long)] = Seq(
+      ("nearDuplicatePairsWithHandle", () => DedupOps.nearDuplicatePairsWithHandle(
+        pairDocs, "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.5), 1, 1L),
+      ("nearDedupAgainstWithHandle", () => DedupOps.nearDedupAgainstWithHandle(
+        incoming, "doc_id", "text", landed, "body",
+        numHashes = 64, bands = 16, threshold = 0.5), 2, 1L),
+      ("contaminatedIdsBloomWithHandle", () => DedupOps.contaminatedIdsBloomWithHandle(
+        probeDocs, "doc_id", "text", probes, "text", shingleSize = 5), 1, 1L),
+      ("duplicateSpansWithHandle", () => DedupOps.duplicateSpansWithHandle(
+        spanDocs, "doc_id", "text", k = 8), 1, 2L),
+      ("stripDuplicateSpansWithHandle", () => DedupOps.stripDuplicateSpansWithHandle(
+        spanDocs, "doc_id", "text", k = 8), 1, 3L),
+      ("semanticDedupPairsWithHandle", () => SimOps.semanticDedupPairsWithHandle(
+        vecs, "vec_id", "embedding", threshold = 0.9999, nCells = 2), 1, 1L))
+    cases.foreach { case (name, run, cached, rows) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (result, done) = run()
+      try {
+        assert(result.collect().length == rows, s"$name: row count")
+        val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(during.size >= cached,
+          s"$name: expected $cached cached stage(s) while in use, got $during")
+      } finally done()
+      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(after.isEmpty, s"$name: lingering cached RDDs after the handle: $after")
+    }
+  }
+
   test("near-dup docs with null text are skipped, not banded (overflow guard)") {
     val withNull = docs.unionByName(
       Seq((9L, null.asInstanceOf[String])).toDF("doc_id", "text"))
@@ -1599,7 +1651,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("nearDedupAgainst drops near-dups of landed docs, keeps distant " +
-       "and null-text rows; handle releases both shingle caches") {
+       "and null-text rows") {
     import spark.implicits._
     val landed = Seq(
       (0L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -1615,15 +1667,11 @@ class PipelineOpsSpec extends SparkTestBase {
       // null text -> passes through
       (13L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     val (kept, done) = DedupOps.nearDedupAgainstWithHandle(
       incoming, "doc_id", "text", landed, "body",
       numHashes = 64, bands = 16, threshold = 0.5)
-    val ids = kept.collect().map(_.getLong(0)).toSet
+    val ids = try kept.collect().map(_.getLong(0)).toSet finally done()
     assert(ids == Set(12L, 13L), s"got $ids")
-    done()
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty, s"lingering cached RDDs after unpersist: $after")
     // landed near-dups must NOT dedup the increment against itself: two
     // mutually-similar incoming docs both far from the landed corpus stay
     val twins = Seq(
@@ -1662,13 +1710,14 @@ class PipelineOpsSpec extends SparkTestBase {
       numHashes = 64, bands = 16, shingleSize = 3)
     val viaIndex = DedupOps.nearDedupAgainstIndex(
       incoming, "doc_id", "text", idx, threshold = 0.5)
-    val direct = DedupOps.nearDedupAgainst(
+    val (direct, releaseDirect) = DedupOps.nearDedupAgainstWithHandle(
       incoming, "doc_id", "text", landed, "body",
-      numHashes = 64, bands = 16, threshold = 0.5,
-      shingleStorage = org.apache.spark.storage.StorageLevel.NONE)
+      numHashes = 64, bands = 16, threshold = 0.5)
+    val directIds =
+      try direct.collect().map(_.getLong(0)).toSet finally releaseDirect()
     val gotIdx = viaIndex.collect().map(_.getLong(0)).toSet
     assert(gotIdx == Set(101L, 102L), s"got $gotIdx")
-    assert(gotIdx == direct.collect().map(_.getLong(0)).toSet,
+    assert(gotIdx == directIds,
       "index path must be row-identical to the direct path")
     // the landed band table arrives through a bucketed scan (no exchange
     // re-clustering the corpus side)
