@@ -264,23 +264,111 @@ object DedupOps {
         .filter(col("__bn") <= maxBucket).drop("__bn")
     }
 
-  /** Exact-Jaccard verify shared by the direct and indexed two-sided
-    * paths — the q74/q75 row-identical contract holds BECAUSE both run
-    * this one implementation: join shingle arrays in for candidate
-    * (incoming, landed) pairs only, keep incoming ids with any verified
-    * match. Same round(6) convention as [[nearDuplicatePairs]]. */
-  private def verifiedContaminatedIds(candidates: DataFrame, incSh: DataFrame,
-      refSh: DataFrame, idCol: String, refIdC: String,
-      threshold: Double): DataFrame = {
-    val joined = candidates
+  /** Stage `df` behind a MEMORY_AND_DISK cache, returning its release.
+    * Spark keys the cache by plan: when an earlier caller left this plan
+    * cached, `persist()` is a no-op and an unconditional `unpersist()`
+    * would drop that caller's entry — so an already-cached plan is used
+    * as it is and its release does nothing. */
+  private[ops] def stage(df: DataFrame): (DataFrame, () => Unit) =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) (df, () => ())
+    else {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (df, () => { df.unpersist(); () })
+    }
+
+  /** First half of the MinHash-LSH sketch every near-dup path shares:
+    * `(id, __sh)` over NON-EMPTY shingle sets. Docs with an empty set
+    * (null text) cannot near-duplicate anything, and banding their
+    * all-MaxValue signature would overflow the mod-P31 band fold (the
+    * oracle emits no band rows for them — ADVICE r3). */
+  private def shingleSets(df: DataFrame, id: Column, textCol: String,
+                          shingleSize: Int): DataFrame =
+    df.select(id, shingles(col(textCol), shingleSize).as("__sh"))
+      .filter(size(col("__sh")) > 0)
+
+  /** The landed side's shingle sets: the internal identity
+    * `__ref_id = xxhash64(text)` (no id column required of the corpus,
+    * deterministic under task retries, unlike a `monotonically_
+    * increasing_id`), exact duplicates collapsed before banding. */
+  private def refShingleSets(df: DataFrame, textCol: String,
+                             shingleSize: Int): DataFrame =
+    shingleSets(df, xxhash64(col(textCol)).as("__ref_id"), textCol, shingleSize)
+      .dropDuplicates("__ref_id")
+
+  /** Second half of the sketch: `(id, band_id, band_hash)` rows of a
+    * shingle-set table. */
+  private def bandRows(sh: DataFrame, idCol: String, numHashes: Int,
+                       bands: Int): DataFrame =
+    lshBands(sh.select(col(idCol),
+      minHashFromShingles(col("__sh"), numHashes).as("__sig")),
+      idCol, "__sig", bands)
+
+  /** Exact shingle Jaccard, round(6) — the convention every near-dup
+    * oracle replays. */
+  private def jaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast(DoubleType)
+    val union = size(array_union(a, b)).cast(DoubleType)
+    round(when(union > 0, inter / union).otherwise(lit(0.0)), 6)
+  }
+
+  /** The sketch parameters `(num_hashes, bands, shingle_size)` a landed
+    * near-dup index was built with, from its `<name>_meta` row — every
+    * index consumer reads them here, never from its own arguments. */
+  private[graft] def nearDupParams(spark: org.apache.spark.sql.SparkSession,
+                                   name: String): (Int, Int, Int) = {
+    val m = graft.sources.IndexCatalog.requireMeta(spark, name,
+      s"no near-dup index '$name' in the session catalog — run " +
+      "landNearDupIndex first")
+    (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
+      m.getAs[Int]("shingle_size"))
+  }
+
+  /** The ONE two-sided near-dup probe, run by the direct, indexed and
+    * audit paths — so q74 ≡ q75, and "matches reported ⇔ rows dropped",
+    * hold by construction. Incoming shingle sets band and equi-join the
+    * reference's `(band_id, band_hash, __ref_id)` rows carrying band keys
+    * and ids only, never shingle payloads (the r2 scale lesson); shingle
+    * arrays join in for the distinct candidate pairs only; the exact
+    * Jaccard verifies. Returns `(idCol, __ref_id, __jac)` at/above
+    * `threshold`. `observed` emits the candidate count
+    * ([[ObservedMetrics]]) on the drop paths. */
+  private def nearDupMatches(incSh: DataFrame, idCol: String,
+      refBands: DataFrame, refSh: DataFrame, numHashes: Int, bands: Int,
+      threshold: Double, observed: Boolean): DataFrame = {
+    val distinctPairs = bandRows(incSh, idCol, numHashes, bands)
+      .join(refBands, Seq("band_id", "band_hash"))
+      .select(col(idCol), col("__ref_id")).distinct()
+    val candidates =
+      if (!observed) distinctPairs
+      else distinctPairs.observe(obsName(ObservedMetrics.NearDupCandidateMetrics),
+        count(lit(1)).as("candidate_pairs"))
+    candidates
       .join(incSh.select(col(idCol), col("__sh").as("__sh_i")), Seq(idCol))
-      .join(refSh.select(col(refIdC), col("__sh").as("__sh_r")), Seq(refIdC))
-    val inter = size(array_intersect(col("__sh_i"), col("__sh_r"))).cast("double")
-    val union = size(array_union(col("__sh_i"), col("__sh_r"))).cast("double")
-    joined
-      .filter(round(when(union > 0, inter / union).otherwise(lit(0.0)), 6)
-        >= threshold)
-      .select(col(idCol)).distinct()
+      .join(refSh.select(col("__ref_id"), col("__sh").as("__sh_r")), Seq("__ref_id"))
+      .withColumn("__jac", jaccard(col("__sh_i"), col("__sh_r")))
+      .filter(col("__jac") >= threshold)
+  }
+
+  /** Drop the rows of `df` with any verified match. */
+  private def dropMatched(df: DataFrame, idCol: String,
+                          matches: DataFrame): DataFrame = {
+    val contaminated = matches.select(col(idCol)).distinct()
+      .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
+        count(lit(1)).as("verified_ids"))
+    df.join(contaminated, Seq(idCol), "left_anti")
+  }
+
+  /** [[nearDupMatches]] of `df`, sketched with the index's parameters,
+    * against the bucketed `_bands`/`_shingles` scans (unstaged). */
+  private def indexMatches(df: DataFrame, idCol: String, textCol: String,
+      name: String, threshold: Double, maxRefBucket: Int,
+      observed: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    requireIdColFree(idCol)
+    val (numHashes, bands, shingleSize) = nearDupParams(spark, name)
+    nearDupMatches(shingleSets(df, col(idCol), textCol, shingleSize), idCol,
+      capBandBuckets(spark.table(s"${name}_bands"), maxRefBucket),
+      spark.table(s"${name}_shingles"), numHashes, bands, threshold, observed)
   }
 
   /** The band/shingle machinery's internal column names; a user id column
@@ -321,10 +409,10 @@ object DedupOps {
    *  - `maxRefBucket > 0` caps landed-side bucket width (boilerplate fans),
    *    the same skew guard as [[nearDuplicatePairs]]' `maxBucket`.
    *
-   * At steady state the landed side's shingle+band derivation is the thing
-   * to PERSIST between ingests (land it bucketed by band keys, in the
-   * spirit of [[graft.sources.BucketedLand]]); this operator recomputes it
-   * from raw text, which is one full corpus scan per call.
+   * This operator recomputes the landed side's shingles and bands from raw
+   * text on every call — one full corpus scan. At steady state land them
+   * once with [[landNearDupIndex]] and probe with [[nearDedupAgainstIndex]],
+   * which runs this same probe over bucketed scans.
    *
    * Only NULL-text rows pass through (null shingle array — they cannot
    * near-duplicate anything). Token-less non-null text (empty or
@@ -339,36 +427,15 @@ object DedupOps {
                        shingleSize: Int = 3, threshold: Double = 0.7,
                        maxRefBucket: Int = 0): (DataFrame, () => Unit) = {
     requireIdColFree(idCol)
-    // internal names live in joins across BOTH frames — collision-proof
-    // against both column sets (exactDedupAgainst convention)
-    var refIdC = "__ref_id"
-    while (df.columns.contains(refIdC) || reference.columns.contains(refIdC))
-      refIdC += "_"
-    val incSh = df
-      .select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val refSh = reference
-      .select(xxhash64(col(refTextCol)).as(refIdC),
-        shingles(col(refTextCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .dropDuplicates(refIdC)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val incBands = lshBands(incSh.select(col(idCol),
-      minHashFromShingles(col("__sh"), numHashes).as("__sig")), idCol, "__sig", bands)
-    val refBands = capBandBuckets(lshBands(refSh.select(col(refIdC),
-      minHashFromShingles(col("__sh"), numHashes).as("__sig")),
-      refIdC, "__sig", bands), maxRefBucket)
-    val candidates = incBands.join(refBands, Seq("band_id", "band_hash"))
-      .select(col(idCol), col(refIdC)).distinct()
-      .observe(obsName(ObservedMetrics.NearDupCandidateMetrics),
-        count(lit(1)).as("candidate_pairs"))
-    val contaminated = verifiedContaminatedIds(candidates, incSh, refSh,
-      idCol, refIdC, threshold)
-      .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
-        count(lit(1)).as("verified_ids"))
-    val result = df.join(contaminated, Seq(idCol), "left_anti")
-    (result, () => { incSh.unpersist(); refSh.unpersist(); () })
+    val (incSh, releaseInc) =
+      stage(shingleSets(df, col(idCol), textCol, shingleSize))
+    val (refSh, releaseRef) =
+      stage(refShingleSets(reference, refTextCol, shingleSize))
+    val refBands = capBandBuckets(
+      bandRows(refSh, "__ref_id", numHashes, bands), maxRefBucket)
+    val result = dropMatched(df, idCol, nearDupMatches(incSh, idCol,
+      refBands, refSh, numHashes, bands, threshold, observed = true))
+    (result, () => { releaseInc(); releaseRef() })
   }
 
   /**
@@ -407,21 +474,15 @@ object DedupOps {
     graft.sources.IndexCatalog.pinMeta(spark, name, "landNearDupIndex",
       path, Seq("num_hashes" -> numHashes, "bands" -> bands,
         "shingle_size" -> shingleSize)): Unit
-    val staged = reference
-      .select(xxhash64(col(refTextCol)).as("__ref_id"),
-        shingles(col(refTextCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .dropDuplicates("__ref_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (staged, release) =
+      stage(refShingleSets(reference, refTextCol, shingleSize))
     try {
       graft.sources.BucketedLand.landOnce(staged, s"${name}_shingles",
         "__ref_id", Seq("__ref_id"), buckets, path.map(p => s"${p}_shingles"))
-      val bandRows = lshBands(staged.select(col("__ref_id"),
-          minHashFromShingles(col("__sh"), numHashes).as("__sig")),
-        "__ref_id", "__sig", bands)
-      graft.sources.BucketedLand.landOnce(bandRows, s"${name}_bands",
+      graft.sources.BucketedLand.landOnce(
+        bandRows(staged, "__ref_id", numHashes, bands), s"${name}_bands",
         "band_hash", Seq("band_hash"), buckets, path.map(p => s"${p}_bands"))
-    } finally staged.unpersist()
+    } finally release()
   }
 
   /**
@@ -434,31 +495,9 @@ object DedupOps {
    */
   def nearDedupAgainstIndex(df: DataFrame, idCol: String, textCol: String,
                             name: String, threshold: Double = 0.7,
-                            maxRefBucket: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    requireIdColFree(idCol)
-    val m = graft.sources.IndexCatalog.requireMeta(spark, name,
-      s"no near-dup index '$name' in the session catalog — run " +
-      "landNearDupIndex first")
-    val (numHashes, bands, shingleSize) = (m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Int]("shingle_size"))
-    val incSh = df
-      .select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-    val incBands = lshBands(incSh.select(col(idCol),
-      minHashFromShingles(col("__sh"), numHashes).as("__sig")),
-      idCol, "__sig", bands)
-    val refBands = capBandBuckets(spark.table(s"${name}_bands"), maxRefBucket)
-    val candidates = incBands.join(refBands, Seq("band_id", "band_hash"))
-      .select(col(idCol), col("__ref_id")).distinct()
-      .observe(obsName(ObservedMetrics.NearDupCandidateMetrics),
-        count(lit(1)).as("candidate_pairs"))
-    val contaminated = verifiedContaminatedIds(candidates, incSh,
-      spark.table(s"${name}_shingles"), idCol, "__ref_id", threshold)
-      .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
-        count(lit(1)).as("verified_ids"))
-    df.join(contaminated, Seq(idCol), "left_anti")
-  }
+                            maxRefBucket: Int = 0): DataFrame =
+    dropMatched(df, idCol, indexMatches(df, idCol, textCol, name, threshold,
+      maxRefBucket, observed = true))
 
   /**
    * The AUDIT companion of [[nearDedupAgainstIndex]]: instead of silently
@@ -471,44 +510,19 @@ object DedupOps {
    * triage or a dedup-quality dashboard reads; the drop path stays the
    * cheap one.
    *
-   * Same bucketed probe plan as the drop path (band equi-join carrying
-   * ids only, shingle fetch for surviving candidates only); the final
-   * per-doc rollup is a hash agg on the doc id.
+   * The drop path's own probe ([[nearDupMatches]]), so the ids reported
+   * are exactly the ids [[nearDedupAgainstIndex]] drops; the per-doc
+   * rollup is a hash agg on the doc id.
    */
   def nearDupMatchesAgainstIndex(df: DataFrame, idCol: String,
                                  textCol: String, name: String,
                                  threshold: Double = 0.7,
-                                 maxRefBucket: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    requireIdColFree(idCol)
-    val m = graft.sources.IndexCatalog.requireMeta(spark, name,
-      s"no near-dup index '$name' in the session catalog — run " +
-      "landNearDupIndex first")
-    val (numHashes, bands, shingleSize) = (m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Int]("shingle_size"))
-    val incSh = df
-      .select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-    val incBands = lshBands(incSh.select(col(idCol),
-      minHashFromShingles(col("__sh"), numHashes).as("__sig")),
-      idCol, "__sig", bands)
-    val refBands = capBandBuckets(spark.table(s"${name}_bands"), maxRefBucket)
-    val candidates = incBands.join(refBands, Seq("band_id", "band_hash"))
-      .select(col(idCol), col("__ref_id")).distinct()
-    val joined = candidates
-      .join(incSh.select(col(idCol), col("__sh").as("__sh_i")), Seq(idCol))
-      .join(spark.table(s"${name}_shingles")
-        .select(col("__ref_id"), col("__sh").as("__sh_r")), Seq("__ref_id"))
-    val inter = size(array_intersect(col("__sh_i"), col("__sh_r"))).cast("double")
-    val union = size(array_union(col("__sh_i"), col("__sh_r"))).cast("double")
-    joined
-      .withColumn("__jac",
-        round(when(union > 0, inter / union).otherwise(lit(0.0)), 6))
-      .filter(col("__jac") >= threshold)
+                                 maxRefBucket: Int = 0): DataFrame =
+    indexMatches(df, idCol, textCol, name, threshold, maxRefBucket,
+        observed = false)
       .groupBy(col(idCol))
       .agg(count_distinct(col("__ref_id")).as("n_matched_refs"),
         max(col("__jac")).as("best_jaccard"))
-  }
 
   /**
    * Fold accepted ingest rows back into a landed near-dup index
@@ -535,11 +549,7 @@ object DedupOps {
   def appendNearDupIndex(accepted: DataFrame, textCol: String,
                          name: String): Long = {
     val spark = accepted.sparkSession
-    val m = graft.sources.IndexCatalog.requireMeta(spark, name,
-      s"no near-dup index '$name' in the session catalog — run " +
-      "landNearDupIndex first")
-    val (numHashes, bands, shingleSize) = (m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Int]("shingle_size"))
+    val (numHashes, bands, shingleSize) = nearDupParams(spark, name)
     // cross-application writer lease on the index family (r15): two
     // drivers appending this name, or an append racing another driver's
     // compaction, serialize at the warehouse filesystem — the JVM-local
@@ -559,11 +569,7 @@ object DedupOps {
     // for the second write and the count. Checkpointing truncates the
     // lineage so the batch is pinned before any table changes. (Batch-sized
     // data only — the landed corpus is never materialized here.)
-    val staged = accepted
-      .select(xxhash64(col(textCol)).as("__ref_id"),
-        shingles(col(textCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .dropDuplicates("__ref_id")
+    val staged = refShingleSets(accepted, textCol, shingleSize)
       .join(spark.table(s"${name}_shingles").select("__ref_id"),
         Seq("__ref_id"), "left_anti")
       .localCheckpoint()
@@ -580,9 +586,7 @@ object DedupOps {
       // a steady-state stream appends every micro-batch, and the per-batch
       // file constant is what the probe scans pay for until the next
       // [[graft.sources.BucketedLand.compactTable]]
-      lshBands(staged.select(col("__ref_id"),
-          minHashFromShingles(col("__sh"), numHashes).as("__sig")),
-        "__ref_id", "__sig", bands)
+      bandRows(staged, "__ref_id", numHashes, bands)
         .repartition(spec.numBuckets, col("band_hash"))
         .write.mode("append")
         .bucketBy(spec.numBuckets, "band_hash").sortBy("band_hash")
@@ -724,17 +728,8 @@ object DedupOps {
     // scans + tokenizations of the 100 TB table instead of one. The staged
     // (id, shingles) table is the only thing every later stage needs; at
     // cluster scale this is the classic signature-table materialization.
-    //
-    // Docs with an EMPTY shingle set (null text) are dropped up front: they
-    // cannot near-duplicate anything, and banding their all-MaxValue
-    // signature would overflow the mod-P31 band fold (the oracle emits no
-    // band rows for them — ADVICE r3).
-    val sh = df.select(col(idCol), shingles(col(textCol), shingleSize).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val withSig = sh.select(col(idCol),
-      minHashFromShingles(col("__sh"), numHashes).as("__sig"))
-    val bandsDf = capBandBuckets(lshBands(withSig, idCol, "__sig", bands),
+    val (sh, release) = stage(shingleSets(df, col(idCol), textCol, shingleSize))
+    val bandsDf = capBandBuckets(bandRows(sh, idCol, numHashes, bands),
       maxBucket)
     val a = bandsDf.select(col("band_id"), col("band_hash"), col(idCol).as("id_a"))
     val b = bandsDf.select(col("band_id"), col("band_hash"), col(idCol).as("id_b"))
@@ -751,7 +746,7 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
       .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_pairs"))
-    (pairs, () => { sh.unpersist(); () })
+    (pairs, release)
   }
 
   /** Near-dedup: drop every doc that near-duplicates a lower-id doc (one
@@ -1181,15 +1176,12 @@ object DedupOps {
 
   /** Jaccard over a pre-shingled (idCol, __sh) table. */
   private def jaccardForShingledPairs(sh: DataFrame, pairs: DataFrame,
-                                      idCol: String): DataFrame = {
-    val joined = pairs
+                                      idCol: String): DataFrame =
+    pairs
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("sh_a")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("sh_b")), "id_b")
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType)
-    val union = size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType)
-    joined.select(col("id_a"), col("id_b"),
-      round(when(union > 0, inter / union).otherwise(lit(0.0)), 6).as("jaccard"))
-  }
+      .select(col("id_a"), col("id_b"),
+        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
 
   /**
    * Benchmark decontamination: ids of documents sharing at least one
@@ -1810,10 +1802,9 @@ object DedupOps {
     // the verify semi-join all read them — unstaged, the probe corpus would
     // be tokenized + shingled three times per call (same rationale as
     // nearDuplicatePairsWithHandle's staged shingle table)
-    val probeSh = probes
+    val (probeSh, release) = stage(probes
       .select(explode(shingles(col(probeTextCol), shingleSize)).as("__sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val nEst =
       if (expectedDistinctProbes > 0) expectedDistinctProbes
       // the count materializes the cache AND is exact (it runs over the
@@ -1832,7 +1823,7 @@ object DedupOps {
       .where(sketchExprs.bloomMightContain(bloom, xxhash64(col("__sh"))))
     val result = candidates.join(probeSh, Seq("__sh"), "left_semi")
       .select(col(idCol)).distinct()
-    (result, () => { probeSh.unpersist(); () })
+    (result, release)
   }
 
   /**
@@ -1883,10 +1874,9 @@ object DedupOps {
                               shingleSize: Int, fpp: Double,
                               expectedDistinctProbes: Long): Array[Byte] = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
-    val probeSh = probes
+    val (probeSh, release) = stage(probes
       .select(explode(shingles(col(probeTextCol), shingleSize)).as("__sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     try {
       val nEst =
         if (expectedDistinctProbes > 0) expectedDistinctProbes
@@ -1899,7 +1889,7 @@ object DedupOps {
           .HashSketchExpressions
           .bloomAggregate(xxhash64(col("__sh")), nEst, numBits))
         .head().getAs[Array[Byte]](0)
-    } finally probeSh.unpersist()
+    } finally release()
   }
 
   /** 64-bit SimHash over tokens (term-frequency weighted). Native codegen
@@ -2025,10 +2015,9 @@ object DedupOps {
     val X = org.apache.spark.sql.catalyst.expressions.grafttext.TextKernelExpressions
     val toks = col("__toff").getField("toks")
     val n = size(toks)
-    val withT = df
+    val (withT, release) = stage(df
       .select(col(idCol), X.tokenizeWithOffsets(col(textCol)).as("__toff"))
-      .filter(n >= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(n >= k))
     // native positional k-gram hash kernel (graftdedup.GramXxHashesExpr):
     // the interpreted transform/slice/array_join lambda this replaced ran
     // per position per row (the DSIR-kernel lesson)
@@ -2068,7 +2057,7 @@ object DedupOps {
         element_at(col("__toff").getField("ends"), col("tok_end").cast(IntegerType))
           .cast(LongType).as("char_end"),
         col("n_dup_grams"))
-    (result, () => { withT.unpersist(); () })
+    (result, release)
   }
 
   /**

@@ -1822,8 +1822,7 @@ object SimOps {
     require(!Set("id_a", "id_b", "cell", "cos_sim", "__cell", "__cn",
         "__va", "__vb").contains(idCol),
       s"idCol '$idCol' collides with a semanticDedup internal column — rename it first")
-    val vecs = corpus.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (vecs, release) = DedupOps.stage(corpus.select(col(idCol), col(vecCol)))
     // r15: lifted-ceiling derive + two-level assignment past
     // FlatAssignMaxCells (see resolveAssigner — the 1000x-decade fix;
     // identical to the r14 flat path at every cell count <= 4096)
@@ -1872,7 +1871,7 @@ object SimOps {
       .observe(DedupOps.obsName(DedupOps.ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_pairs"))
       .select(col("id_a"), col("id_b"), col("__cell").as("cell"), col("cos_sim"))
-    (result, () => { vecs.unpersist(); () })
+    (result, release)
   }
 
   /** Semantic dedup: drop rows whose vector semantically duplicates a

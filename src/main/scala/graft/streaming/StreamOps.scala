@@ -1051,11 +1051,8 @@ object StreamOps {
       // (one head() job on the stream's FIRST batch, zero after) instead
       // of a fresh meta-table scan job on EVERY micro-batch; appends that
       // rewrite meta invalidate the cache in-JVM
-      val m = graft.sources.IndexCatalog.requireMeta(batch.sparkSession,
-        name, s"no near-dup index '$name' in the session catalog — run " +
-          "landNearDupIndex first")
-      val (numHashes, bands, shingleSize) = (m.getAs[Int]("num_hashes"),
-        m.getAs[Int]("bands"), m.getAs[Int]("shingle_size"))
+      val (numHashes, bands, shingleSize) =
+        D.nearDupParams(batch.sparkSession, name)
       // PIN the micro-batch before fanning out: the body references `batch`
       // from the within-batch self-join, the index probe, and the append —
       // each would re-evaluate the incoming plan (and a foreachBatch frame

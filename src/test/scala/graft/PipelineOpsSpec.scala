@@ -754,6 +754,28 @@ class PipelineOpsSpec extends SparkTestBase {
     }
   }
 
+  test("a *WithHandle handle leaves in place a cache an earlier call made " +
+       "on the same staged plan") {
+    val own = Seq((0L, "handles release only the cache they staged themselves"),
+      (1L, "handles release only the cache they staged themselves today"),
+      (2L, "unrelated words about bucketed parquet scans"))
+      .toDF("doc_id", "text")
+    // the staged (id, shingles) plan nearDuplicatePairs persists
+    val staged = own.select(col("doc_id"), DedupOps.shingles(col("text"), 3).as("__sh"))
+      .filter(size(col("__sh")) > 0)
+    try {
+      assert(DedupOps.nearDuplicatePairs(own, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.5).count() == 1)
+      assert(staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "nearDuplicatePairs should leave its staged plan cached")
+      val (pairs, done) = DedupOps.nearDuplicatePairsWithHandle(own, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.5)
+      try assert(pairs.count() == 1) finally done()
+      assert(staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the handle dropped a cache entry it did not make")
+    } finally staged.unpersist()
+  }
+
   test("near-dup docs with null text are skipped, not banded (overflow guard)") {
     val withNull = docs.unionByName(
       Seq((9L, null.asInstanceOf[String])).toDF("doc_id", "text"))
@@ -1462,7 +1484,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("contaminatedIdsBloomWithHandle: handle releases the probe cache " +
-       "(persist returns `this`, so the branch must be on storage level)") {
+       "it staged") {
     import spark.implicits._
     val docs = Seq((0L, "alpha beta gamma delta epsilon"),
                    (1L, "totally different words here now")).toDF("doc_id", "text")
@@ -1719,6 +1741,14 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(gotIdx == Set(101L, 102L), s"got $gotIdx")
     assert(gotIdx == directIds,
       "index path must be row-identical to the direct path")
+    // the audit path reports exactly the ids the drop path drops; the
+    // NULL-text row is in neither set
+    val audited = DedupOps.nearDupMatchesAgainstIndex(
+        incoming, "doc_id", "text", idx, threshold = 0.5)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val dropped = Set(100L, 101L, 102L) -- gotIdx
+    assert(audited == dropped, s"audit reports $audited, drop path drops $dropped")
+    assert(!audited.contains(102L) && !dropped.contains(102L))
     // the landed band table arrives through a bucketed scan (no exchange
     // re-clustering the corpus side)
     val plan = viaIndex.queryExecution.executedPlan.toString

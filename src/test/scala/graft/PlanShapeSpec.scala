@@ -155,6 +155,45 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("nearDedupAgainstIndex reads _bands and _shingles as bucketed scans; " +
+       "exchange count pinned") {
+    val idx = "plan_shape_ndidx"
+    def dropIndex(): Unit =
+      Seq(s"${idx}_bands", s"${idx}_shingles", s"${idx}_meta").foreach { t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        val loc = new java.io.File(s"spark-warehouse/$t")
+        if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
+      }
+    val landed = (0L until 30L).map { i =>
+      (i, s"landed document number $i with shared boilerplate and tail token$i")
+    }.toDF("rid", "body")
+    val incoming = Seq(
+      (100L, "landed document number 7 with shared boilerplate and tail token7 extra"),
+      (101L, "entirely fresh material nothing in common")).toDF("doc_id", "text")
+    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    dropIndex()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      DedupOps.landNearDupIndex(landed, "body", idx)
+      val plan = DedupOps.nearDedupAgainstIndex(incoming, "doc_id", "text", idx)
+        .queryExecution.executedPlan.toString
+      Seq("_bands", "_shingles").foreach { t =>
+        val scans = plan.linesIterator.filter(_.contains(s"$idx$t[")).toSeq
+        assert(scans.nonEmpty && scans.forall(_.contains("Bucketed: true")),
+          s"$idx$t should read as a bucketed scan:\n$plan")
+      }
+      // the landed tables never re-shuffle: the 3 hash exchanges key the
+      // increment (doc_id; the (doc_id, __ref_id) candidate distinct), and
+      // at this size the band scan, the shingle scan and the increment's
+      // shingle sets broadcast
+      assert(countOccurrences(plan, "Exchange hashpartitioning") == 3, plan)
+      assert(countOccurrences(plan, "BroadcastExchange") == 3, plan)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
+      dropIndex()
+    }
+  }
+
   test("bucketed ingest: per-cast window chain runs with ZERO exchanges") {
     val table = "bucketed_casts_test"
     val bucketed = graft.sources.CtdRead.ingestBucketed(
