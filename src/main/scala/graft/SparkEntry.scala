@@ -87,9 +87,9 @@ object SparkEntry {
     val pc = Cast.pressCheck(d, "cast_id", "scan_order", valueCols)
     val dn = Cast.split(pc, "cast_id", "scan_order")
       .filter(col("direction") === "down")
-    // edgesViaWindow: the despike kernel blocks column pruning, so the
-    // default mode's separate edges aggregate would re-run parse+despike
-    // wholesale (measured: 4.5 s of the chain's 9.2 s at r15); the window
+    // edgesViaWindow: the default mode's separate edges aggregate is a
+    // second branch that re-runs parse+despike (measured: 4.5 s of the
+    // chain's 9.2 s at r15); the window
     // mode derives the same edges AND the empty bins from one upstream
     // pass with no join (PlanShapeSpec pins one scan) — bit-identical
     // output (KernelSpec parity pin; q181/q181b goldens unchanged)
@@ -300,11 +300,9 @@ object SparkEntry {
     }),
 
     "q09_despike" -> ((s: SparkSession, dir: String) => {
-      // prune BEFORE the kernel: it is opaque to Catalyst, so
-      // unused columns (props is a fat string) would ride the shuffle and
-      // the external-Row encode — measured 0.74 s vs 1.1 s at 10x sf0.1
-      Cast.despike(t(s, dir, "events")
-            .select(col("user_id"), col("event_id"), col("value")),
+      // the select after the kernel prunes below it: unused columns
+      // (props is a fat string) never reach the shuffle
+      Cast.despike(t(s, dir, "events"),
           "user_id", "event_id", Seq("value"),
           n1 = 2.0, n2 = 20.0, block = 16)
         .select(col("user_id"), col("event_id"), col("value").as("value_despiked"))

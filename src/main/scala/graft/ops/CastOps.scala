@@ -81,9 +81,10 @@ object Cast {
    *  - `true`: first/last over an unbounded window per cast, and the
    *    empty bins ride the same rows into the one aggregate — ONE
    *    upstream execution, one hash exchange, no join. The right shape
-   *    when `df` is a COMPUTE-HEAVY pipeline the optimizer cannot prune
-   *    (the QC chain: the despike kernel blocks column pruning, so any
-   *    second reference to `df` re-runs parse+despike wholesale).
+   *    when `df` is a COMPUTE-HEAVY pipeline (the QC chain: any second
+   *    reference to `df` re-runs parse+despike, and the windows here
+   *    reuse the kernels' cast partitioning and order, so the whole
+   *    chain shuffles and sorts once).
    */
   def bindataAverage(df: DataFrame, castCol: String, orderCol: String,
                      valueCols: Seq[String], delta: Double = 1.0,
@@ -248,34 +249,32 @@ object Cast {
               valueCols: Seq[String], n1: Double = 2.0, n2: Double = 20.0,
               block: Int = 100,
               refExact: Boolean = false): DataFrame = {
-    // Caller note: the kernel is opaque to Catalyst — prune df to the
-    // columns you need BEFORE calling (see KernelGuard.sortedGroups).
-    //
     // Execution strategy: a per-cast SEQUENTIAL kernel (the SeqOps
     // pattern), not a window plan. The sliding-frame rolling stats are
     // O(rows x block) arithmetic either way, but WindowExec re-aggregates
     // each frame through un-codegen'd aggregate buffers — measured ~6x
     // slower per core than this fused primitive loop on the 4-cast
     // 330k-row QC-chain benchmark (BenchChain; the reference's numpy
-    // stride-tricks rolling is the same O(n*w) in C). One shuffle on
-    // castCol (none over a scan bucketed on it), parallelism = cast
-    // count — exactly the property that scales at 100 TB. The kernel
-    // replicates Spark's own Average and CentralMomentAgg (stddev_pop)
-    // update recurrences operation-for-operation, so results are
-    // bit-identical to the windowed plan
-    // (`despikeWindowed`, kept below; DespikeParitySpec pins equality and
-    // the q09 DuckDB oracle is unchanged).
-    val schema  = df.schema
-    val valIdx  = valueCols.map(schema.fieldIndex).toArray
+    // stride-tricks rolling is the same O(n*w) in C). The kernel node
+    // clusters on castCol only where its input is not already clustered
+    // there (a bucketed scan, an upstream kernel or window on castCol),
+    // reads only the value columns and passes the rest through;
+    // parallelism = cast count — exactly the property that scales at
+    // 100 TB. The kernel replicates Spark's own Average and
+    // CentralMomentAgg (stddev_pop) update recurrences
+    // operation-for-operation, so results are bit-identical to the
+    // windowed plan (`despikeWindowed`, kept below; DespikeParitySpec
+    // pins equality and the q09 DuckDB oracle is unchanged).
+    //
     // flagged cells become null regardless of the column's declared
-    // nullability (same schema change the windowed `when` produced)
-    val outSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
-      f => if (valueCols.contains(f.name)) f.copy(nullable = true) else f))
-    // the helper's sort is the Window.orderBy(col(orderCol)) order
+    // nullability (same schema change the windowed `when` produced); the
+    // helper's sort is the Window.orderBy(col(orderCol)) order
     // despikeWindowed uses, over ANY orderable order column
-    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), outSchema, "despike") {
-      rows =>
-        val n = rows.length
+    val valFields = valueCols.map(c => df.schema(c).copy(nullable = true))
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), valueCols, valFields,
+        Nil, keepRows = true, "despike") {
+      g =>
+        val n = g.length
         val idx0 = math.max(0, n - block) // last full-window start (0-based)
         // forward-window mean/stddev_pop at every row of (v, vNull),
         // replicating Spark's agg recurrences (sum/count for avg;
@@ -421,19 +420,9 @@ object Cast {
           }
           flagged
         }
-        def channelMask(vi: Int): Array[Boolean] = {
-          val x  = new Array[Double](n)
-          val xN = new Array[Boolean](n)
-          var i = 0
-          while (i < n) {
-            rows(i).get(vi) match {
-              case null      => xN(i) = true
-              case num: Number => x(i) = num.doubleValue()
-              case other => throw new IllegalArgumentException(
-                s"despike: non-numeric value $other")
-            }
-            i += 1
-          }
+        def channelMask(k: Int): Array[Boolean] = {
+          val x  = g.doubles(k, nullAs = 0.0)
+          val xN = Array.tabulate(n)(g.isNullAt(k, _))
           val f1 = pass(x, xN, x, xN, n1)
           // cleaned series for pass 2: pass-1 flags become nulls
           val c  = new Array[Double](n)
@@ -452,32 +441,22 @@ object Cast {
         // concurrent tasks this degrades to the sequential loop).
         // Bit-parity is untouched: each channel's arithmetic is
         // self-contained and lands in its own dropMask slot.
+        val nv = valueCols.length
         val dropMask: Array[Array[Boolean]] =
-          if (valIdx.length > 1 && n.toLong * valIdx.length * block > (1L << 22)) {
-            val out = new Array[Array[Boolean]](valIdx.length)
-            java.util.stream.IntStream.range(0, valIdx.length).parallel()
-              .forEach(k => out(k) = channelMask(valIdx(k)))
+          if (nv > 1 && n.toLong * nv * block > (1L << 22)) {
+            val out = new Array[Array[Boolean]](nv)
+            java.util.stream.IntStream.range(0, nv).parallel()
+              .forEach(k => out(k) = channelMask(k))
             out
-          } else valIdx.map(channelMask)
-        rows.iterator.zipWithIndex.map { case (r, i) =>
-          // r16: flags are sparse (a few thousand rows in a few hundred
-          // thousand) — rows with no flagged cell pass through as the
-          // ORIGINAL object instead of a cell-by-cell rebuild
-          var any = false
-          var vc = 0
-          while (vc < valIdx.length && !any) {
-            any = dropMask(vc)(i); vc += 1
+          } else Array.tabulate(nv)(channelMask)
+        val w = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nv)
+        Iterator.range(0, n).map { i =>
+          var k = 0
+          while (k < nv) {
+            w.update(k, if (dropMask(k)(i)) null else g.value(k, i))
+            k += 1
           }
-          if (!any) r
-          else {
-            val cells = Array.tabulate[Any](schema.length)(r.get)
-            vc = 0
-            while (vc < valIdx.length) {
-              if (dropMask(vc)(i)) cells(valIdx(vc)) = null
-              vc += 1
-            }
-            org.apache.spark.sql.Row.fromSeq(cells.toIndexedSeq)
-          }
+          g.emit(i, w)
         }
     }
   }

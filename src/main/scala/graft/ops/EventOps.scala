@@ -503,7 +503,7 @@ object EventOps {
    * trend.
    *
    * The recurrence is order-sensitive, so this is a sequential kernel in
-   * the [[graft.ops.SeqOps]] family, NOT a window function: one shuffle on
+   * the [[graft.ops.SeqOps]] family, NOT a window function: clustered on
    * `keyCol` ([[KernelGuard.sortedGroups]], sorted on `(tsCol, tieCol)` →
    * linear fold), parallelism from key count. Per-key event counts are
    * bounded (10^3..10^6); both engines evaluate `alpha*x + beta*prev`
@@ -518,26 +518,23 @@ object EventOps {
     require(alpha > 0.0 && alpha <= 1.0,
       s"ewma: alpha must be in (0, 1], got $alpha")
     val beta = 1.0 - alpha
-    val schema = df.schema
-    val valIdx = schema.fieldIndex(valueCol)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        out, org.apache.spark.sql.types.DoubleType, nullable = true))
     // a NULL key folds apart from the literal string "null" (the classic
     // dirty-data artifact); NULL timestamps sort first
-    KernelGuard.sortedGroups(df, keyCol, Seq(tsCol, tieCol), outSchema, "ewma") {
-      rows =>
-        var state: java.lang.Double = null
-        rows.iterator.map { r =>
-          r.get(valIdx) match {
-            case null => // carry
-            case n: java.lang.Number =>
-              val x = n.doubleValue()
-              state = if (state == null) x else alpha * x + beta * state
-            case other => throw new IllegalArgumentException(
-              s"ewma: non-numeric value $other")
+    KernelGuard.sortedGroups(df, keyCol, Seq(tsCol, tieCol), Seq(valueCol),
+        Nil, Seq(org.apache.spark.sql.types.StructField(out,
+          org.apache.spark.sql.types.DoubleType)), keepRows = true, "ewma") {
+      g =>
+        val x = g.doubles(0)
+        var state = 0.0
+        var seeded = false
+        val w = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+        Iterator.range(0, g.length).map { i =>
+          if (!g.isNullAt(0, i)) { // a null carries
+            state = if (!seeded) x(i) else alpha * x(i) + beta * state
+            seeded = true
           }
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (state: Any))
+          if (seeded) w.setDouble(0, state) else w.setNullAt(0)
+          g.emit(i, w)
         }
     }
   }

@@ -1,17 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftkernel.{GroupKernel, GroupRows}
+import org.apache.spark.sql.types.StructField
 
 /**
  * The one place that decides how a per-cast sequential kernel
  * ([[Cast.despike]], [[SeqOps]], [[EventOps.ewma]]) sees its data: how a
  * group is keyed, ordered and bounded.
  *
- *  - Keyed: Spark's typed grouping on the key column itself, so a NULL key
- *    is its own group, apart from the string "null", and a scan bucketed
- *    on the key plans no exchange.
+ *  - Keyed: a clustered distribution on the key column itself, so a NULL
+ *    key is its own group, apart from the string "null", and a scan
+ *    bucketed on the key plans no exchange.
  *  - Ordered: Spark sorts each group before the kernel sees it, in its
  *    ascending order (NULLS FIRST, NaN greatest, -0.0 = 0.0, UTF8 byte
  *    order) — the order `Window.partitionBy(key).orderBy(...)` uses, so a
@@ -23,6 +24,14 @@ import org.apache.spark.sql.types.StructType
  *    `graft.kernel.maxGroupRows` cap turns that into a loud, immediate
  *    error naming the offending group key and the conf to raise.
  *
+ * The kernel runs inside one planner node
+ * ([[org.apache.spark.sql.graftkernel.GroupKernel]]) over InternalRow: it
+ * reads and writes only the columns it names, every other column passes
+ * through by ordinal under its own attribute, so column pruning reaches
+ * below the node and the node keeps its input's cast partitioning (and,
+ * when it keeps rows, their order). A chain of kernels and per-cast
+ * windows on one key therefore shuffles and sorts once.
+ *
  * The default cap (2M rows) is ~200x the documented cast size yet well
  * under a task's share of executor memory; raise per-session via
  * `spark.conf.set("graft.kernel.maxGroupRows", n)` for genuinely huge
@@ -33,30 +42,19 @@ object KernelGuard {
   val DefaultMaxGroupRows: Int = 2000000
 
   /** Run `kernel` once per `keyCol` group over the group's rows sorted by
-    * `orderCols`; the kernel's rows must match `outSchema`. `op` names the
-    * caller in the cap error. An optimization barrier: prune `df` to the
-    * columns the kernel needs BEFORE calling, or every unused column rides
-    * the shuffle and the external-Row decode. */
+    * `orderCols`. The kernel reads the numeric columns `reads`, writes
+    * `rewrites` in place of the first `rewrites.length` of them and adds
+    * `appends` after them (all nullable). With `keepRows` it emits one row
+    * per input row in input order and the other columns pass through;
+    * without it the output is `keyCol` followed by the written columns.
+    * `op` names the caller in the cap error. */
   def sortedGroups(df: DataFrame, keyCol: String, orderCols: Seq[String],
-                   outSchema: StructType, op: String)(
-                   kernel: Array[Row] => Iterator[Row]): DataFrame = {
-    // resolved at PLAN time (driver side): the closure captures an Int
+                   reads: Seq[String], rewrites: Seq[StructField],
+                   appends: Seq[StructField], keepRows: Boolean, op: String)(
+                   kernel: GroupRows => Iterator[InternalRow]): DataFrame = {
+    // resolved at PLAN time (driver side): the node carries an Int
     val cap = df.sparkSession.conf.get(ConfKey, DefaultMaxGroupRows.toString).toInt
-    df.groupBy(col(keyCol))
-      .as[Row, Row](Encoders.row(StructType(Seq(df.schema(keyCol)))),
-        Encoders.row(df.schema))
-      .flatMapSortedGroups(orderCols.map(col): _*) { (key, it) =>
-        val buf = new scala.collection.mutable.ArrayBuffer[Row](256)
-        while (it.hasNext) {
-          buf += it.next()
-          if (buf.length > cap)
-            throw new IllegalStateException(
-              s"$op: cast group $keyCol=${key.get(0)} exceeds $ConfKey=$cap " +
-              "rows — the per-cast kernels materialize one cast per task " +
-              "and this group does not look like a cast. Check the cast-id " +
-              s"column, or raise the cap with spark.conf.set(\"$ConfKey\", n).")
-        }
-        kernel(buf.toArray)
-      }(Encoders.row(outSchema))
+    GroupKernel(df, op, keyCol, orderCols, reads, rewrites, appends, keepRows,
+      cap)(kernel)
   }
 }

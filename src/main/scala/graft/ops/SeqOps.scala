@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 import graft.dsp.{Butterworth, FiltFilt, Interp, Kernels}
@@ -9,51 +11,42 @@ import graft.dsp.{Butterworth, FiltFilt, Interp, Kernels}
  * Per-cast SEQUENTIAL kernels — operators whose recurrence cannot be
  * expressed as a Spark window function (IIR filtering, boundary-reflected
  * convolution, regridding). Each runs through [[KernelGuard.sortedGroups]]:
- * one shuffle on `castCol` (none over a scan bucketed on it), Spark sorts
- * the 10^3-10^4 rows of one cast by `orderCol` (NULLS FIRST), and a pure
- * `graft.dsp` kernel runs over them; parallelism comes from cast count,
- * which is what scales at 100 TB (SURVEY §2.5). All are optimization
- * barriers — apply filters/projections BEFORE these ops so Catalyst can
- * push them into the scan.
+ * Spark clusters the rows on `castCol` and sorts each cast's 10^3-10^4
+ * rows by `orderCol` (NULLS FIRST), and a pure `graft.dsp` kernel runs
+ * over the columns it names; parallelism comes from cast count, which is
+ * what scales at 100 TB (SURVEY §2.5). The clustering and the sort are
+ * planned only where the input does not already provide them: none over
+ * a scan bucketed on `castCol`, none over another per-cast kernel or
+ * window on it, so a chain of them shuffles once. Columns a kernel does
+ * not name pass through untouched, and a projection after the op prunes
+ * them below it.
  *
  * Null discipline: sensor nulls enter kernels as NaN (numpy semantics —
  * e.g. an IIR filter smears a NaN forward, exactly like the reference) and
- * NaN results leave as null.
+ * NaN results leave as null. Every column a kernel writes is DOUBLE,
+ * whatever numeric type it was read from (numpy semantics again).
  */
 object SeqOps {
 
-  private def numAt(r: Row, i: Int): Double = r.get(i) match {
-    case null      => Double.NaN
-    case n: Number => n.doubleValue()
-    case other     => throw new IllegalArgumentException(s"non-numeric value $other")
-  }
-
-  private def box(d: Double): Any =
-    if (java.lang.Double.isNaN(d)) null else java.lang.Double.valueOf(d)
+  /** `d` into slot `k` of a written row, NaN as null. */
+  private def put(w: InternalRow, k: Int, d: Double): Unit =
+    if (java.lang.Double.isNaN(d)) w.setNullAt(k) else w.setDouble(k, d)
 
   /** Generic per-cast column transform: `kernel` maps each value column's
     * sorted samples to replacement samples of the same length. */
   private def perCastColumns(df: DataFrame, castCol: String, orderCol: String,
-                             valueCols: Seq[String])(
-                             kernel: Array[Double] => Array[Double]): DataFrame = {
-    val schema = df.schema
-    val valIdx = valueCols.map(schema.fieldIndex)
-    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), schema,
-        "perCastColumns") { rows =>
-      val replaced: Map[Int, Array[Double]] = valIdx.map { vi =>
-        vi -> kernel(rows.map(numAt(_, vi)))
-      }.toMap
-      rows.iterator.zipWithIndex.map { case (r, i) =>
-        val vals = Array.tabulate[Any](schema.length) { c =>
-          replaced.get(c) match {
-            case Some(ys) => box(ys(i))
-            case None     => r.get(c)
-          }
-        }
-        Row.fromSeq(vals.toIndexedSeq)
+                             valueCols: Seq[String], op: String)(
+                             kernel: Array[Double] => Array[Double]): DataFrame =
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), valueCols,
+        valueCols.map(StructField(_, DoubleType)), Nil, keepRows = true, op) { g =>
+      val ys = Array.tabulate(valueCols.length)(k => kernel(g.doubles(k)))
+      val w = new GenericInternalRow(ys.length)
+      Iterator.range(0, g.length).map { i =>
+        var k = 0
+        while (k < ys.length) { put(w, k, ys(k)(i)); k += 1 }
+        g.emit(i, w)
       }
     }
-  }
 
   /**
    * Butterworth order-2 low-pass applied forward-backward (filtfilt) to the
@@ -65,7 +58,8 @@ object SeqOps {
                timeConstant: Double = 0.15): DataFrame = {
     val wn     = (1.0 / timeConstant) / (sampleRate * 2.0)
     val (b, a) = Butterworth.butter2LowPass(wn)
-    perCastColumns(df, castCol, orderCol, Seq(pressure))(FiltFilt.filtfilt(b, a, _))
+    perCastColumns(df, castCol, orderCol, Seq(pressure), "lpFilter")(
+      FiltFilt.filtfilt(b, a, _))
   }
 
   /** Mirror-extended windowed convolution smoothing of the value columns.
@@ -73,7 +67,8 @@ object SeqOps {
   def smooth(df: DataFrame, castCol: String, orderCol: String,
              valueCols: Seq[String], windowLen: Int = 11,
              window: String = "hanning"): DataFrame =
-    perCastColumns(df, castCol, orderCol, valueCols)(Kernels.smooth(_, windowLen, window))
+    perCastColumns(df, castCol, orderCol, valueCols, "smooth")(
+      Kernels.smooth(_, windowLen, window))
 
   /**
    * `bindata(delta, method="interpolate")` (ctd/processing.py:121-123):
@@ -83,27 +78,23 @@ object SeqOps {
    */
   def bindataInterpolate(df: DataFrame, castCol: String, orderCol: String,
                          valueCols: Seq[String], delta: Double = 1.0,
-                         pressure: String = "pressure"): DataFrame = {
-    val schema  = df.schema
-    val castIdx = schema.fieldIndex(castCol)
-    val pIdx    = schema.fieldIndex(pressure)
-    val valIdx  = valueCols.map(schema.fieldIndex)
-    val outSchema = StructType(
-      schema(castIdx) +: StructField(pressure, DoubleType) +:
-        valueCols.map(StructField(_, DoubleType)))
-    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), outSchema,
-        "bindataInterpolate") { rows =>
-      val xs = rows.map(numAt(_, pIdx))
+                         pressure: String = "pressure"): DataFrame =
+    KernelGuard.sortedGroups(df, castCol, Seq(orderCol), pressure +: valueCols,
+        Nil, (pressure +: valueCols).map(StructField(_, DoubleType)),
+        keepRows = false, "bindataInterpolate") { g =>
+      val xs = g.doubles(0)
       val start = math.ceil(xs.head)
       val stop  = math.floor(xs.last)
       val nGrid = math.max(0, math.ceil((stop - start) / delta - 1e-12).toInt)
       val grid  = Array.tabulate(nGrid)(k => start + k * delta)
-      val castVal = rows.head.get(castIdx)
-      val cols = valIdx.map(vi => Interp.linear(grid, xs, rows.map(numAt(_, vi)))).toArray
-      grid.iterator.zipWithIndex.map { case (g, k) =>
-        Row.fromSeq(castVal +: java.lang.Double.valueOf(g) +:
-          cols.map(c => box(c(k))).toIndexedSeq)
+      val cols = Array.tabulate(valueCols.length)(
+        k => Interp.linear(grid, xs, g.doubles(k + 1)))
+      val w = new GenericInternalRow(1 + cols.length)
+      Iterator.range(0, nGrid).map { k =>
+        w.setDouble(0, grid(k))
+        var c = 0
+        while (c < cols.length) { put(w, c + 1, cols(c)(k)); c += 1 }
+        g.emit(0, w)
       }
     }
-  }
 }

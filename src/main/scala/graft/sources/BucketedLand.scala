@@ -6,11 +6,12 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 /**
  * Generic one-time bucketed landing: write any DataFrame as a sorted
  * bucketed parquet table so every later per-key pipeline (windows,
- * per-cast kernels) reads a scan that ALREADY satisfies its clustered
+ * per-cast kernels, and chains of both, which keep the key's partitioning
+ * from one to the next) reads a scan that ALREADY satisfies its clustered
  * distribution — zero exchanges per run instead of re-shuffling the corpus
  * every pipeline execution (the same pattern as `CtdRead.ingestBucketed`,
  * generalized beyond instrument files; PlanShapeSpec pins the
- * exchange-free plan).
+ * exchange-free plans).
  *
  * `landOnce` is idempotent per session: the write happens only when the
  * table isn't registered yet, so repeated query construction (warmup

@@ -83,9 +83,10 @@ object CtdRead {
    * ([[graft.ops.KernelGuard.sortedGroups]]: despike, lp_filter, ...) that
    * reads the scan directly, runs with ZERO exchanges after the one-time
    * ingest — at 10^12 samples that is the difference between re-shuffling
-   * the corpus per pipeline run and never shuffling it again. A kernel's
-   * output no longer carries the bucket partitioning, so an operator fed BY
-   * a kernel re-exchanges once (PlanShapeSpec pins all three shapes).
+   * the corpus per pipeline run and never shuffling it again. A kernel
+   * keeps the cast partitioning of its input, so a chain of kernels and
+   * windows over the scan (lpFilter -> despike -> interpolateIndex) runs
+   * with zero exchanges too (PlanShapeSpec pins these shapes).
    * Returns the re-read table.
    */
   def ingestBucketed(spark: SparkSession, ftype: String, inPath: String,

@@ -65,8 +65,11 @@ object IndexCatalog {
   // is not seen until re-land or session end — same staleness class as
   // Spark's own file-index cache; the cross-app writer paths hold the
   // WriterLease and re-read through their own JVM's cache coherently.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, Row]]()
+  // Sessions are WEAK identity keys: a session nobody references any more
+  // is collected together with its cached rows.
+  private val metaCache: java.util.concurrent.ConcurrentMap[
+      SparkSession, java.util.concurrent.ConcurrentHashMap[String, Row]] =
+    new com.google.common.collect.MapMaker().weakKeys().makeMap()
   private def sessionCache(spark: SparkSession) =
     metaCache.computeIfAbsent(spark,
       _ => new java.util.concurrent.ConcurrentHashMap[String, Row]())

@@ -36,8 +36,7 @@ class PlanShapeSpec extends SparkTestBase {
     assert(countOccurrences(plan, "Exchange hashpartitioning") == 1, plan)
   }
 
-  test("kernel despike in a chain costs exactly one extra exchange — and " +
-       "no more") {
+  test("kernel despike in a window chain shares the chain's ONE exchange") {
     val ev = events.withColumn("pressure", col("event_id").cast("double"))
     val chained = Cast.interpolateIndex(
       Cast.movingAverage(
@@ -46,12 +45,10 @@ class PlanShapeSpec extends SparkTestBase {
       "user_id", "event_id", Seq("value"))
     val plan = chained.queryExecution.executedPlan.toString
     // the sequential kernel (default despike — measured ~7x the windowed
-    // plan's throughput at block=100, BenchChain r10) hands its rows back
-    // through the object-serialize boundary, which hides its cast-column
-    // partitioning from the planner, so the downstream window chain
-    // re-exchanges once on the cast column; the window ops after it still
-    // fuse onto that ONE exchange. 2 total, never 3.
-    assert(countOccurrences(plan, "Exchange hashpartitioning") == 2, plan)
+    // plan's throughput at block=100, BenchChain r10) keeps the cast
+    // column's attribute and reports its input's partitioning and order,
+    // so the downstream window chain needs no exchange of its own
+    assert(countOccurrences(plan, "Exchange hashpartitioning") == 1, plan)
   }
 
   test("QC chain (lpFilter -> despike -> pressCheck -> split.down -> " +
@@ -71,13 +68,16 @@ class PlanShapeSpec extends SparkTestBase {
     val out = Cast.bindataAverage(dn, "cast_id", "scan_order", valueCols,
       delta = 1.0, edgesViaWindow = true)
     val plan = out.queryExecution.executedPlan.toString
-    // exchanges: scan -> lpFilter, lpFilter -> despike, despike -> the
-    // window chain; the bin aggregate keys on the cast, so the windows'
-    // partitioning already satisfies it
+    // one exchange and one sort, scan -> lpFilter: the kernels pass the
+    // cast partitioning and the (cast, scan) order through to each other
+    // and to the window chain; the bin aggregate keys on the cast, so the
+    // windows' partitioning already satisfies it
     assert(countOccurrences(plan, "BatchScan ctd") == 1, plan)
-    assert(countOccurrences(plan, "MapGroups") == 2, plan)
+    assert(countOccurrences(plan, "MapGroups") == 0, plan)
+    assert(countOccurrences(plan, "GroupKernel") == 2, plan)
     assert(!plan.contains("SortMergeJoin"), plan)
-    assert(countOccurrences(plan, "Exchange hashpartitioning") == 3, plan)
+    assert(countOccurrences(plan, "Exchange hashpartitioning") == 1, plan)
+    assert(countOccurrences(plan, "Sort [") == 1, plan)
   }
 
   test("two reads of one ctd source canonicalize equal: the shuffle of " +
@@ -199,9 +199,8 @@ class PlanShapeSpec extends SparkTestBase {
     val bucketed = graft.sources.CtdRead.ingestBucketed(
       spark, "cnv", s"$dataDir/CTD_with_sigma_e00.cnv", table, buckets = 4)
     try {
-      // the WINDOW formulation composes with bucketing end to end (the
-      // kernel despike reads the bucketed scan without an exchange too,
-      // see below, but a window op fed BY a kernel re-exchanges once)
+      // the WINDOW formulation composes with bucketing end to end (so do
+      // the kernels, and kernels feeding windows: see below)
       val chained = Cast.interpolateIndex(
         Cast.despikeWindowed(bucketed, "cast_id", "scan_order",
           Seq("t068C"), 2, 20, 16),
@@ -225,6 +224,22 @@ class PlanShapeSpec extends SparkTestBase {
       val plan = out.queryExecution.executedPlan.toString
       assert(countOccurrences(plan, "Exchange hashpartitioning") == 0, plan)
       assert(out.count() > 0)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("bucketed ingest: lpFilter -> despike -> interpolateIndex plans ZERO " +
+       "exchanges") {
+    val table = "bucketed_kernel_chain_test"
+    val bucketed = graft.sources.CtdRead.ingestBucketed(
+      spark, "cnv", s"$dataDir/CTD_with_sigma_e00.cnv", table, buckets = 4)
+    try {
+      val chained = Cast.interpolateIndex(
+        Cast.despike(graft.ops.SeqOps.lpFilter(bucketed, "cast_id", "scan_order"),
+          "cast_id", "scan_order", Seq("t068C"), 2, 20, 16),
+        "cast_id", "scan_order", Seq("t068C"))
+      val plan = chained.queryExecution.executedPlan.toString
+      assert(countOccurrences(plan, "Exchange hashpartitioning") == 0, plan)
+      assert(chained.count() > 0)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
