@@ -14,9 +14,11 @@ import org.apache.spark.sql.SparkSession
  * query was absorbing the warmup pass's garbage, showing 13 s for a 1.7 s
  * plan, and single-shot numbers disagreed by 2-3x between runs):
  *  - one untimed pass over the whole suite first (JIT compilation +
- *    generated-code caches + parquet footer caches + the deliberate
- *    `persist()`s: q37's one-time CNV ingest IS the parse-once operating
- *    pattern a repeat execution on a cluster would see);
+ *    generated-code caches + parquet footer caches). It also checks that
+ *    no query leaves a persisted RDD behind once its result is dropped
+ *    (after a GC and the ContextCleaner): a leftover would let the timed
+ *    reps read blocks the warm-up staged, so a query that leaves one is
+ *    reported in `errors` with the count instead of being timed;
  *  - an explicit System.gc() after the warmup pass so the first timed slot
  *    doesn't pay for the warmup's accumulated garbage;
  *  - each query timed `SPARK_GRAFT_REPS` times (default 5) and reported as
@@ -407,8 +409,17 @@ object Bench {
       .sorted.filter(n => only.forall(_.contains(n))) ++
       controlEntries.map(_._1)
     if (names.exists(_.endsWith("_probe"))) landSteady()
-    if (sys.env.get("SPARK_GRAFT_WARM").contains("head")) runOnce(names.head)
-    else names.foreach(runOnce)
+    // the leak check GCs in the untimed warm-up only, so the timed passes
+    // below carry no GC of their own
+    val leaked = scala.collection.mutable.Map[String, Int]()
+    def warmUp(name: String): Unit = {
+      val before = PersistedRdds.ids(spark)
+      runOnce(name)
+      val left = PersistedRdds.leftAfterGc(spark, before).size
+      if (left > 0) leaked(name) = left
+    }
+    if (sys.env.get("SPARK_GRAFT_WARM").contains("head")) warmUp(names.head)
+    else names.foreach(warmUp)
     // don't let warmup-pass garbage land in the first timed slot
     // (unconditional: every protocol generation included this GC)
     System.gc()
@@ -430,7 +441,10 @@ object Bench {
       }
     def median(name: String): Either[String, Double] = {
       val runs = passes.map(_(name))
-      runs.collectFirst { case Left(m) => Left(m) }.getOrElse {
+      val failure = leaked.get(name)
+        .map(n => s"left $n persisted RDD(s) after its warm-up run")
+        .orElse(runs.collectFirst { case Left(m) => m })
+      failure.map(Left(_)).getOrElse {
         val ts = runs.collect { case Right(s) => s }.sorted
         Right(ts(ts.length / 2))
       }

@@ -843,18 +843,18 @@ object SparkEntry {
       // a scan_order TIE between two files (an input ambiguity, not an
       // operator property). The reference-generated golden parquet this
       // query is now hash-anchored to requires well-defined input.
-      // persist: bindata's edge aggregate + main aggregate each scan the
+      // stage: bindata's edge aggregate + main aggregate each scan the
       // samples, and a ctd-source scan is a full re-parse (no columnar cache
       // behind it, unlike parquet)
       val files = Seq("g01l01s01", "g01l02s01", "g01l04s01", "g01l05s01")
         .map(n => s"$fixtures/CTD/$n.cnv.gz")
       val raw = CtdRead.cnv(s, files)
-      val samples = Cast.split(Cast.removeAboveWater(raw), "cast_id", "scan_order")
-        .filter(col("direction") === "down")
-        // project BEFORE persist: pruning then reaches the ctd scan, whose
-        // tokenizer skips the ~12 unprojected channels per line
-        .select(col("cast_id"), col("scan_order"), col("pressure"), col("t090C"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val samples = graft.ops.Snapshots.stage(
+        Cast.split(Cast.removeAboveWater(raw), "cast_id", "scan_order")
+          .filter(col("direction") === "down")
+          // project BEFORE staging: pruning then reaches the ctd scan,
+          // whose tokenizer skips the ~12 unprojected channels per line
+          .select(col("cast_id"), col("scan_order"), col("pressure"), col("t090C")))
       val meta = CtdRead.casts(s, "cnv", files)
       graft.ops.Extras.section(samples, meta, "cast_id", "scan_order",
           "t090C", delta = 50.0)
@@ -2364,13 +2364,11 @@ object SparkEntry {
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("lang", StringType), StructField("source", StringType),
         StructField("n_chars", LongType)))
-      val (good, quarantine, release) =
+      val (good, quarantine) =
         graft.sources.IngestOps.readJsonlQuarantine(s, tmp, schema)
       val nQ = quarantine.count()
       require(nQ == 3, s"expected exactly the 3 planted poisons, got $nQ")
-      val out = good.select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
-      release() // good re-parses uncached; quarantine is already counted
-      out
+      good.select(col("doc_id"), col("lang")).orderBy(col("doc_id"))
     }),
 
     "q174_blocklist_gate" -> ((s: SparkSession, dir: String) => {

@@ -264,18 +264,6 @@ object DedupOps {
         .filter(col("__bn") <= maxBucket).drop("__bn")
     }
 
-  /** Stage `df` behind a MEMORY_AND_DISK cache, returning its release.
-    * Spark keys the cache by plan: when an earlier caller left this plan
-    * cached, `persist()` is a no-op and an unconditional `unpersist()`
-    * would drop that caller's entry — so an already-cached plan is used
-    * as it is and its release does nothing. */
-  private[ops] def stage(df: DataFrame): (DataFrame, () => Unit) =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) (df, () => ())
-    else {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (df, () => { df.unpersist(); () })
-    }
-
   /** First half of the MinHash-LSH sketch every near-dup path shares:
     * `(id, __sh)` over NON-EMPTY shingle sets. Docs with an empty set
     * (null text) cannot near-duplicate anything, and banding their
@@ -379,15 +367,6 @@ object DedupOps {
         "__sig", "__ref_id").contains(idCol),
       s"idCol '$idCol' collides with an LSH-internal column — rename it first")
 
-  /** [[nearDedupAgainst]] without the unpersist handle. */
-  def nearDedupAgainst(df: DataFrame, idCol: String, textCol: String,
-                       reference: DataFrame, refTextCol: String,
-                       numHashes: Int = 64, bands: Int = 16,
-                       shingleSize: Int = 3, threshold: Double = 0.7,
-                       maxRefBucket: Int = 0): DataFrame =
-    nearDedupAgainstWithHandle(df, idCol, textCol, reference, refTextCol,
-      numHashes, bands, shingleSize, threshold, maxRefBucket)._1
-
   /**
    * Incremental-ingest NEAR dedup: keep only the rows of `df` whose text is
    * not a near-duplicate (shingle Jaccard >= `threshold`) of ANY document
@@ -421,21 +400,18 @@ object DedupOps {
    * landed corpus drops every token-less incoming doc, matching the q74
    * oracle's replay of the same shingle arithmetic.
    */
-  def nearDedupAgainstWithHandle(df: DataFrame, idCol: String, textCol: String,
+  def nearDedupAgainst(df: DataFrame, idCol: String, textCol: String,
                        reference: DataFrame, refTextCol: String,
                        numHashes: Int = 64, bands: Int = 16,
                        shingleSize: Int = 3, threshold: Double = 0.7,
-                       maxRefBucket: Int = 0): (DataFrame, () => Unit) = {
+                       maxRefBucket: Int = 0): DataFrame = {
     requireIdColFree(idCol)
-    val (incSh, releaseInc) =
-      stage(shingleSets(df, col(idCol), textCol, shingleSize))
-    val (refSh, releaseRef) =
-      stage(refShingleSets(reference, refTextCol, shingleSize))
+    val incSh = Snapshots.stage(shingleSets(df, col(idCol), textCol, shingleSize))
+    val refSh = Snapshots.stage(refShingleSets(reference, refTextCol, shingleSize))
     val refBands = capBandBuckets(
       bandRows(refSh, "__ref_id", numHashes, bands), maxRefBucket)
-    val result = dropMatched(df, idCol, nearDupMatches(incSh, idCol,
+    dropMatched(df, idCol, nearDupMatches(incSh, idCol,
       refBands, refSh, numHashes, bands, threshold, observed = true))
-    (result, () => { releaseInc(); releaseRef() })
   }
 
   /**
@@ -474,15 +450,12 @@ object DedupOps {
     graft.sources.IndexCatalog.pinMeta(spark, name, "landNearDupIndex",
       path, Seq("num_hashes" -> numHashes, "bands" -> bands,
         "shingle_size" -> shingleSize)): Unit
-    val (staged, release) =
-      stage(refShingleSets(reference, refTextCol, shingleSize))
-    try {
-      graft.sources.BucketedLand.landOnce(staged, s"${name}_shingles",
-        "__ref_id", Seq("__ref_id"), buckets, path.map(p => s"${p}_shingles"))
-      graft.sources.BucketedLand.landOnce(
-        bandRows(staged, "__ref_id", numHashes, bands), s"${name}_bands",
-        "band_hash", Seq("band_hash"), buckets, path.map(p => s"${p}_bands"))
-    } finally release()
+    val staged = Snapshots.stage(refShingleSets(reference, refTextCol, shingleSize))
+    graft.sources.BucketedLand.landOnce(staged, s"${name}_shingles",
+      "__ref_id", Seq("__ref_id"), buckets, path.map(p => s"${p}_shingles"))
+    graft.sources.BucketedLand.landOnce(
+      bandRows(staged, "__ref_id", numHashes, bands), s"${name}_bands",
+      "band_hash", Seq("band_hash"), buckets, path.map(p => s"${p}_bands"))
   }
 
   /**
@@ -705,30 +678,14 @@ object DedupOps {
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 64, bands: Int = 16,
                          shingleSize: Int = 3, threshold: Double = 0.7,
-                         maxBucket: Int = 0): DataFrame =
-    nearDuplicatePairsWithHandle(df, idCol, textCol, numHashes, bands,
-      shingleSize, threshold, maxBucket)._1
-
-  /**
-   * Like [[nearDuplicatePairs]] but also returns an `unpersist` handle for
-   * the staged shingle table. The stage is cached so the signature pass and
-   * both Jaccard sides read ONE materialization instead of re-tokenizing the
-   * corpus four times — but a cached table lives until session end, and
-   * repeated invocations in a long-lived session would accumulate
-   * corpus-sized caches. Call the handle once the result (and any dedup
-   * built on it) has materialized.
-   */
-  def nearDuplicatePairsWithHandle(df: DataFrame, idCol: String, textCol: String,
-                                   numHashes: Int = 64, bands: Int = 16,
-                                   shingleSize: Int = 3, threshold: Double = 0.7,
-                                   maxBucket: Int = 0): (DataFrame, () => Unit) = {
+                         maxBucket: Int = 0): DataFrame = {
     requireIdColFree(idCol)
     // Stage the shingling ONCE: without it the self-join sides, plus both
     // jaccard sides, each re-derive shingles from the raw text — four corpus
     // scans + tokenizations of the 100 TB table instead of one. The staged
     // (id, shingles) table is the only thing every later stage needs; at
     // cluster scale this is the classic signature-table materialization.
-    val (sh, release) = stage(shingleSets(df, col(idCol), textCol, shingleSize))
+    val sh = Snapshots.stage(shingleSets(df, col(idCol), textCol, shingleSize))
     val bandsDf = capBandBuckets(bandRows(sh, idCol, numHashes, bands),
       maxBucket)
     val a = bandsDf.select(col("band_id"), col("band_hash"), col(idCol).as("id_a"))
@@ -742,11 +699,10 @@ object DedupOps {
       .distinct()
       .observe(obsName(ObservedMetrics.NearDupCandidateMetrics),
         count(lit(1)).as("candidate_pairs"))
-    val pairs = jaccardForShingledPairs(sh, candidates, idCol)
+    jaccardForShingledPairs(sh, candidates, idCol)
       .filter(col("jaccard") >= threshold)
       .observe(obsName(ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_pairs"))
-    (pairs, release)
   }
 
   /** Near-dedup: drop every doc that near-duplicates a lower-id doc (one
@@ -919,7 +875,7 @@ object DedupOps {
                          ccAlgorithm: String = "auto"): DataFrame = {
     require(Set("auto", "minlabel", "stars")(ccAlgorithm),
       s"ccAlgorithm must be 'auto', 'minlabel' or 'stars', got '$ccAlgorithm'")
-    val (pairs, done) = nearDuplicatePairsWithHandle(df, idCol, textCol,
+    val pairs = nearDuplicatePairs(df, idCol, textCol,
       numHashes, bands, shingleSize, threshold, maxBucket)
     // Scale-adaptive closure (the broadcast-vs-shuffle-join pattern): the
     // verified pair set is proportional to the DUPLICATE count, usually
@@ -943,7 +899,6 @@ object DedupOps {
     val useLocal = idIsIntegral && probe.length <= localPairLimit
     val losers: DataFrame =
       if (useLocal) {
-        done()
         val parent = collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -980,7 +935,6 @@ object DedupOps {
             connectedMinLabelsOpt(materialized, maxIter).getOrElse(
               connectedStars(materialized, maxIter.max(30)))
         }
-        done()
         labels.filter(col("comp") =!= col("id")).select(col("id").as(idCol))
       }
     df.join(losers, Seq(idCol), "left_anti")
@@ -995,7 +949,7 @@ object DedupOps {
    * go" after [[nearDedupConnected]] dropped it — the mapping is exactly
    * the information the drop discards.
    *
-   * Scale shape: [[nearDuplicatePairsWithHandle]]'s banded candidates +
+   * Scale shape: [[nearDuplicatePairs]]' banded candidates +
    * verified edges (never all-pairs), then the same min-label/star
    * closure as [[nearDedupConnected]] — everything after the pair step is
    * bounded by the DUPLICATE count, not the corpus. Docs in no cluster
@@ -1007,7 +961,7 @@ object DedupOps {
                        shingleSize: Int = 3, threshold: Double = 0.7,
                        maxBucket: Int = 0, maxIter: Int = 20,
                        localPairLimit: Int = 1 << 20): DataFrame = {
-    val (pairs, done) = nearDuplicatePairsWithHandle(df, idCol, textCol,
+    val pairs = nearDuplicatePairs(df, idCol, textCol,
       numHashes, bands, shingleSize, threshold, maxBucket)
     // r16 opt: the same scale-adaptive closure nearDedupConnected /
     // nearDedupKeepBest already use — the verified edge set is bounded by
@@ -1033,7 +987,6 @@ object DedupOps {
     val useLocal = idIsIntegral && probe.length <= localPairLimit
     val labels: DataFrame =
       if (useLocal) {
-        done()
         val parent = collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -1056,10 +1009,8 @@ object DedupOps {
             col("comp").cast(idType).as("comp")))
       } else {
         val materialized = pairs.localCheckpoint()
-        val l = connectedMinLabelsOpt(materialized, maxIter).getOrElse(
+        connectedMinLabelsOpt(materialized, maxIter).getOrElse(
           connectedStars(materialized, maxIter.max(30)))
-        done()
-        l
       }
     labels.select(col("id").as(idCol), col("comp").as("canonical_id"))
   }
@@ -1111,7 +1062,7 @@ object DedupOps {
                         shingleSize: Int = 3, threshold: Double = 0.7,
                         maxBucket: Int = 0, maxIter: Int = 20,
                         localPairLimit: Int = 1 << 20): DataFrame = {
-    val (pairs, done) = nearDuplicatePairsWithHandle(df, idCol, textCol,
+    val pairs = nearDuplicatePairs(df, idCol, textCol,
       numHashes, bands, shingleSize, threshold, maxBucket)
     val spark = df.sparkSession
     val idType = df.schema(idCol).dataType
@@ -1130,7 +1081,6 @@ object DedupOps {
     // min-label closure distributed), so the two are interchangeable
     val labels: DataFrame =
       if (useLocal) {
-        done()
         val parent = collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -1152,10 +1102,8 @@ object DedupOps {
           .select(col("id").cast(idType).as("id"), col("comp")))
       } else {
         val materialized = pairs.localCheckpoint()
-        val l = connectedMinLabelsOpt(materialized, maxIter).getOrElse(
+        connectedMinLabelsOpt(materialized, maxIter).getOrElse(
           connectedStars(materialized, maxIter.max(30)))
-        done()
-        l
       }
     val scored = labels.join(
       df.select(col(idCol).as("id"), score.as("__sc")), Seq("id"))
@@ -1784,30 +1732,18 @@ object DedupOps {
   def contaminatedIdsBloom(docs: DataFrame, idCol: String, textCol: String,
                            probes: DataFrame, probeTextCol: String,
                            shingleSize: Int = 13, fpp: Double = 0.01,
-                           expectedDistinctProbes: Long = 0L): DataFrame =
-    contaminatedIdsBloomWithHandle(docs, idCol, textCol, probes, probeTextCol,
-      shingleSize, fpp, expectedDistinctProbes)._1
-
-  /** [[contaminatedIdsBloom]] plus an unpersist handle for the staged
-    * probe-shingle cache (same contract as
-    * [[nearDuplicatePairsWithHandle]]): call it after the result has
-    * materialized, or repeated calls leak cached blocks for the session
-    * lifetime (ADVICE r6). */
-  def contaminatedIdsBloomWithHandle(docs: DataFrame, idCol: String, textCol: String,
-                           probes: DataFrame, probeTextCol: String,
-                           shingleSize: Int = 13, fpp: Double = 0.01,
-                           expectedDistinctProbes: Long = 0L): (DataFrame, () => Unit) = {
+                           expectedDistinctProbes: Long = 0L): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
     // stage the DISTINCT probe shingles once: sizing, the bloom build, and
     // the verify semi-join all read them — unstaged, the probe corpus would
     // be tokenized + shingled three times per call (same rationale as
-    // nearDuplicatePairsWithHandle's staged shingle table)
-    val (probeSh, release) = stage(probes
+    // nearDuplicatePairs' staged shingle table)
+    val probeSh = Snapshots.stage(probes
       .select(explode(shingles(col(probeTextCol), shingleSize)).as("__sh"))
       .distinct())
     val nEst =
       if (expectedDistinctProbes > 0) expectedDistinctProbes
-      // the count materializes the cache AND is exact (it runs over the
+      // the count materializes the stage AND is exact (it runs over the
       // staged distinct set, so approx_count_distinct buys nothing)
       else probeSh.count().max(1L)
     // optimal bits for n items at fpp: -n ln(p) / (ln 2)^2
@@ -1821,9 +1757,8 @@ object DedupOps {
     val candidates = docs
       .select(col(idCol), explode(shingles(col(textCol), shingleSize)).as("__sh"))
       .where(sketchExprs.bloomMightContain(bloom, xxhash64(col("__sh"))))
-    val result = candidates.join(probeSh, Seq("__sh"), "left_semi")
+    candidates.join(probeSh, Seq("__sh"), "left_semi")
       .select(col(idCol)).distinct()
-    (result, release)
   }
 
   /**
@@ -1867,29 +1802,27 @@ object DedupOps {
   }
 
   /** Build the probe-shingle bloom shared by the streaming flag and (in
-    * spirit) the batch bloom path: distinct shingles staged ONCE behind a
-    * cache so the sizing count and the aggregate don't tokenize the
-    * probes twice, optimal-bits sizing, one driver-held byte array. */
+    * spirit) the batch bloom path: distinct shingles staged ONCE so the
+    * sizing count and the aggregate don't tokenize the probes twice,
+    * optimal-bits sizing, one driver-held byte array. */
   private def buildProbeBloom(probes: DataFrame, probeTextCol: String,
                               shingleSize: Int, fpp: Double,
                               expectedDistinctProbes: Long): Array[Byte] = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
-    val (probeSh, release) = stage(probes
+    val probeSh = Snapshots.stage(probes
       .select(explode(shingles(col(probeTextCol), shingleSize)).as("__sh"))
       .distinct())
-    try {
-      val nEst =
-        if (expectedDistinctProbes > 0) expectedDistinctProbes
-        else probeSh.count().max(1L)
-      val numBits = math.ceil(
-        -nEst.toDouble * math.log(fpp) / (math.log(2) * math.log(2)))
-        .toLong.max(64L)
-      probeSh
-        .select(org.apache.spark.sql.catalyst.expressions.graftdedup
-          .HashSketchExpressions
-          .bloomAggregate(xxhash64(col("__sh")), nEst, numBits))
-        .head().getAs[Array[Byte]](0)
-    } finally release()
+    val nEst =
+      if (expectedDistinctProbes > 0) expectedDistinctProbes
+      else probeSh.count().max(1L)
+    val numBits = math.ceil(
+      -nEst.toDouble * math.log(fpp) / (math.log(2) * math.log(2)))
+      .toLong.max(64L)
+    probeSh
+      .select(org.apache.spark.sql.catalyst.expressions.graftdedup
+        .HashSketchExpressions
+        .bloomAggregate(xxhash64(col("__sh")), nEst, numBits))
+      .head().getAs[Array[Byte]](0)
   }
 
   /** 64-bit SimHash over tokens (term-frequency weighted). Native codegen
@@ -1994,17 +1927,7 @@ object DedupOps {
    * char_start, char_end - char_start + 1)` is the duplicated region.
    */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     k: Int = 8, minDf: Int = 2): DataFrame =
-    duplicateSpansWithHandle(df, idCol, textCol, k, minDf)._1
-
-  /** [[duplicateSpans]] plus the staged-cache unpersist handle (the
-    * [[nearDuplicatePairsWithHandle]] convention): the tokenized+offset
-    * corpus is referenced THREE times (gram document-frequency, the
-    * semi-join back, the char-offset join), so it stages through one
-    * persist — without it each reference re-scans and re-tokenizes the
-    * 100 TB table. Call the handle once the result is consumed. */
-  def duplicateSpansWithHandle(df: DataFrame, idCol: String, textCol: String,
-                               k: Int = 8, minDf: Int = 2): (DataFrame, () => Unit) = {
+                     k: Int = 8, minDf: Int = 2): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minDf >= 2, s"minDf must be >= 2 (1 would flag every gram), got $minDf")
     requireIdColFree(idCol)
@@ -2015,7 +1938,10 @@ object DedupOps {
     val X = org.apache.spark.sql.catalyst.expressions.grafttext.TextKernelExpressions
     val toks = col("__toff").getField("toks")
     val n = size(toks)
-    val (withT, release) = stage(df
+    // the tokenized+offset corpus is read THREE times (gram document
+    // frequency, the semi-join back, the char-offset join): stage it once
+    // instead of re-scanning and re-tokenizing the corpus per read
+    val withT = Snapshots.stage(df
       .select(col(idCol), X.tokenizeWithOffsets(col(textCol)).as("__toff"))
       .filter(n >= k))
     // native positional k-gram hash kernel (graftdedup.GramXxHashesExpr):
@@ -2044,7 +1970,7 @@ object DedupOps {
         when(col("__prev").isNull || col("__pos") - col("__prev") > k, 1L)
           .otherwise(0L))
       .withColumn("__run", sum(col("__new")).over(wOrd))
-    val result = runs.groupBy(col(idCol), col("__run"))
+    runs.groupBy(col(idCol), col("__run"))
       .agg(min(col("__pos")).as("tok_start"),
         (max(col("__pos")) + lit(k - 1)).as("tok_end"),
         count(lit(1)).as("n_dup_grams"))
@@ -2057,7 +1983,6 @@ object DedupOps {
         element_at(col("__toff").getField("ends"), col("tok_end").cast(IntegerType))
           .cast(LongType).as("char_end"),
         col("n_dup_grams"))
-    (result, release)
   }
 
   /**
@@ -2084,21 +2009,10 @@ object DedupOps {
    */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                           k: Int = 8, minDf: Int = 2,
-                          out: String = "clean_text"): DataFrame =
-    stripDuplicateSpansWithHandle(df, idCol, textCol, k, minDf, out)._1
-
-  /** [[stripDuplicateSpans]] plus the staged-token-cache unpersist handle,
-    * threaded through from the underlying [[duplicateSpansWithHandle]] —
-    * the plain variant keeps the session-lifetime cache trade, which a
-    * per-crawl-batch caller in a long-lived session should NOT accept. */
-  def stripDuplicateSpansWithHandle(df: DataFrame, idCol: String,
-                                    textCol: String, k: Int = 8, minDf: Int = 2,
-                                    out: String = "clean_text")
-      : (DataFrame, () => Unit) = {
+                          out: String = "clean_text"): DataFrame = {
     require(!df.columns.contains(out),
       s"output column '$out' already exists — rename it first")
-    val (spans, done) =
-      duplicateSpansWithHandle(df, idCol, textCol, k, minDf)
+    val spans = duplicateSpans(df, idCol, textCol, k, minDf)
     val spanText = df.select(col(idCol), col(textCol))
       .join(spans, Seq(idCol))
       .select(col(idCol), col("tok_start"), col("char_start"), col("char_end"),
@@ -2131,11 +2045,10 @@ object DedupOps {
     val tail = text.substr(
       (element_at(cutsC, -1).getField("ce") + 1).cast(IntegerType),
       (length(text) - element_at(cutsC, -1).getField("ce")).cast(IntegerType))
-    val result = df.join(cuts, Seq(idCol), "left")
+    df.join(cuts, Seq(idCol), "left")
       .withColumn(out,
         when(cutsC.isNull, text)
           .otherwise(concat(concat_ws("", pieces), tail)))
       .drop("__cuts")
-    (result, done)
   }
 }

@@ -33,10 +33,10 @@ object GraphOps {
    * canonicalization / quality-authority use cases read off.
    *
    * Scale shape: `edges` is joined per step on `src` against the rank
-   * vector — the op repartitions-and-persists the degree-annotated edge
-   * table ONCE on `src`, so every superstep reuses that layout and only
-   * the rank vector (|V| rows of 16 bytes) reshuffles; the per-step
-   * aggregate is a two-phase hash agg on `dst`. `iters` is small and
+   * vector — the op computes the degree-annotated edge table ONCE,
+   * partitioned on `src`, and stages it ([[Snapshots.stage]]), so no
+   * superstep recomputes the degree join; the per-step aggregate is a
+   * two-phase hash agg on `dst`. `iters` is small and
    * fixed (power iteration converges geometrically at `damping` rate);
    * plan depth grows linearly with it. Null endpoints drop up front; a
    * hot in-degree node (every corpus links the homepage) is partial-agg
@@ -56,19 +56,19 @@ object GraphOps {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
     val deg = e.groupBy(col("__src")).agg(count(lit(1)).as("__out_deg"))
-    // degree-annotated edges, laid out once by src: every superstep's
-    // rank join reuses this partitioning instead of reshuffling the edges
-    val edgesDeg = e.join(deg, Seq("__src"))
-      .repartition(col("__src")).persist()
-    // the node set is persisted BEFORE the count subquery so the
-    // crossJoin's broadcast count reads the cached rows instead of
+    // degree-annotated edges, laid out once by src (the planner reuses
+    // that layout in the rank joins only with AQE off: an adaptive plan
+    // reports no output partitioning for the stage to carry)
+    val edgesDeg = Snapshots.stage(e.join(deg, Seq("__src"))
+      .repartition(col("__src")))
+    // the node set is staged BEFORE the count subquery so the
+    // crossJoin's broadcast count reads the staged rows instead of
     // re-running the union+distinct shuffle a second time at setup
-    val nodeIds = e.select(col("__src").as("node"))
+    val nodeIds = Snapshots.stage(e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node")))
-      .distinct().persist()
-    val nodes = nodeIds
-      .crossJoin(broadcast(nodeIds.agg(count(lit(1)).as("__n"))))
-      .persist()
+      .distinct())
+    val nodes = Snapshots.stage(nodeIds
+      .crossJoin(broadcast(nodeIds.agg(count(lit(1)).as("__n")))))
     val initU: Column = expr(s"$totalUnits DIV __n")
     val baseU: Column = expr(
       s"((${1000000L - dampingPpm}) * ($totalUnits DIV __n)) DIV 1000000")

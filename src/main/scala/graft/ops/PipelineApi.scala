@@ -425,9 +425,8 @@ object pipeline {
           maxCell = maxCell)
 
       def trainDsir(raw: DataFrame, textCol: String = "text",
-                    dim: Int = 1 << 16, alpha: Double = 1.0,
-                    cache: Boolean = true): TextOps.DsirModel =
-        TextOps.trainDsir(df, raw, textCol, dim, alpha, cache)
+                    dim: Int = 1 << 16, alpha: Double = 1.0): TextOps.DsirModel =
+        TextOps.trainDsir(df, raw, textCol, dim, alpha)
 
       def dsirScore(model: TextOps.DsirModel, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame =

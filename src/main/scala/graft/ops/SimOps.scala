@@ -623,26 +623,20 @@ object SimOps {
     require(iters >= 0, s"kmeansAssignInt: iters must be >= 0, got $iters")
     require(scale >= 1 && scale <= 1000000,
       s"kmeansAssignInt: scale must be in [1, 1e6], got $scale")
-    val q = corpus
+    val q = Snapshots.stage(corpus
       .select(col(idCol).cast(LongType).as("vec_id"),
         intQuantCol(vecCol, scale).as("__q"))
-      .filter(col("vec_id").isNotNull && col("__q").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val maxAbs = intExactGuard(q, "__q", "kmeansAssignInt", scale)
-      val cents = trainIntCentroids(q, "__q", k, iters, maxAbs,
-        "kmeansAssignInt")
-      val qd = q.withColumn("__da", intDistArr(col("__q"), cents))
-      val out =
-        if (withDist)
-          qd.select(col("vec_id"),
-            argminCell(col("__da")).as("cluster_id"),
-            array_min(col("__da")).cast(LongType).as("dist"))
-        else qd.select(col("vec_id"),
-          argminCell(col("__da")).as("cluster_id"))
-      // materialize before unpersist (caller gets a plain result)
-      out.localCheckpoint()
-    } finally q.unpersist()
+      .filter(col("vec_id").isNotNull && col("__q").isNotNull))
+    val maxAbs = intExactGuard(q, "__q", "kmeansAssignInt", scale)
+    val cents = trainIntCentroids(q, "__q", k, iters, maxAbs,
+      "kmeansAssignInt")
+    val qd = q.withColumn("__da", intDistArr(col("__q"), cents))
+    if (withDist)
+      qd.select(col("vec_id"),
+        argminCell(col("__da")).as("cluster_id"),
+        array_min(col("__da")).cast(LongType).as("dist"))
+    else qd.select(col("vec_id"),
+      argminCell(col("__da")).as("cluster_id"))
   }
 
   /** `floor(x*scale + 0.5)` quantization to integer-valued doubles — the
@@ -660,7 +654,7 @@ object SimOps {
   /** Exactness guard: "bit-exact integer arithmetic in doubles" only
     * holds while every intermediate stays below 2^53. The largest dot
     * intermediate is bounded by maxAbs^2 * dim (q.q); check it from one
-    * small agg on the already-persisted quantized frame instead of
+    * small agg on the already-staged quantized frame instead of
     * silently degrading to inexact doubles on large |x|*scale or dim.
     * Returns maxAbs for the per-cluster sum bound. */
   private def intExactGuard(q: DataFrame, qCol: String, caller: String,
@@ -886,7 +880,7 @@ object SimOps {
     (qq - 2.0 * d) + cc
   }
 
-  /** The integer-exact Lloyd training loop over a persisted quantized
+  /** The integer-exact Lloyd training loop over a staged quantized
     * frame `(vec_id, qCol)` — per-iteration one corpus-wide assignment
     * map + one (cluster, dim)-keyed agg (shuffle bounded by k x dim),
     * centroid update `floor(sum/count)`, empty clusters keep their
@@ -1286,17 +1280,14 @@ object SimOps {
                               idCol: String, vecCol: String, k: Int,
                               nCells: Int, nProbe: Int, iters: Int,
                               scale: Int): DataFrame = {
-    val q = corpus
+    val q = Snapshots.stage(corpus
       .select(col(idCol).cast(LongType).as("vec_id"),
         intQuantCol(vecCol, scale).as("__q"))
-      .filter(col("vec_id").isNotNull && col("__q").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = try {
-      val (maxAbs, uniform) =
-        intExactGuardDims(q, "__q", "ivfTopK(intLloyd)", scale)
-      trainIntCentroids(q, "__q", nCells, iters, maxAbs, "ivfTopK(intLloyd)",
-        init = "maximin", uniformDim = uniform)
-    } finally q.unpersist()
+      .filter(col("vec_id").isNotNull && col("__q").isNotNull))
+    val (maxAbs, uniform) =
+      intExactGuardDims(q, "__q", "ivfTopK(intLloyd)", scale)
+    val cents = trainIntCentroids(q, "__q", nCells, iters, maxAbs,
+      "ivfTopK(intLloyd)", init = "maximin", uniformDim = uniform)
     // corpus side: map-side argmin-integer-distance cell (centroids ride
     // as codegen literals; first-min tie = lowest cell id, the oracle's
     // ORDER BY dist, cid)
@@ -1800,21 +1791,7 @@ object SimOps {
   def semanticDedupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          threshold: Double = 0.9, nCells: Int = 0,
                          trainCodebook: Boolean = false, lloydIters: Int = 5,
-                         trainSample: Int = 4096, maxCell: Int = 0): DataFrame =
-    semanticDedupPairsWithHandle(corpus, idCol, vecCol, threshold, nCells,
-      trainCodebook, lloydIters, trainSample, maxCell)._1
-
-  /** [[semanticDedupPairs]] plus the staged-cache unpersist handle (the
-    * [[graft.ops.DedupOps.nearDuplicatePairsWithHandle]] convention): the
-    * (id, vector) projection is referenced up to five times — the derive
-    * count, the codebook collect, the cell assignment, and both verify
-    * joins — so it stages through one persist; without it each reference
-    * re-runs the caller's upstream. */
-  def semanticDedupPairsWithHandle(corpus: DataFrame, idCol: String, vecCol: String,
-                                   threshold: Double = 0.9, nCells: Int = 0,
-                                   trainCodebook: Boolean = false, lloydIters: Int = 5,
-                                   trainSample: Int = 4096, maxCell: Int = 0)
-      : (DataFrame, () => Unit) = {
+                         trainSample: Int = 4096, maxCell: Int = 0): DataFrame = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"threshold must be a cosine in [-1, 1], got $threshold")
     // internal/output names — an id column reusing one would resolve
@@ -1822,7 +1799,10 @@ object SimOps {
     require(!Set("id_a", "id_b", "cell", "cos_sim", "__cell", "__cn",
         "__va", "__vb").contains(idCol),
       s"idCol '$idCol' collides with a semanticDedup internal column — rename it first")
-    val (vecs, release) = DedupOps.stage(corpus.select(col(idCol), col(vecCol)))
+    // the (id, vector) projection is read up to five times (the derive
+    // count, the codebook collect, the cell assignment, both verify
+    // joins): stage it once instead of re-running the caller's upstream
+    val vecs = Snapshots.stage(corpus.select(col(idCol), col(vecCol)))
     // r15: lifted-ceiling derive + two-level assignment past
     // FlatAssignMaxCells (see resolveAssigner — the 1000x-decade fix;
     // identical to the r14 flat path at every cell count <= 4096)
@@ -1860,7 +1840,7 @@ object SimOps {
       // negligible bytes.
       .repartition(vecs.sparkSession.sessionState.conf.numShufflePartitions,
         col("id_a"), col("id_b"))
-    val result = candidates
+    candidates
       .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va"),
         norm(col(vecCol)).as("__na")), "id_a")
       .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
@@ -1871,7 +1851,6 @@ object SimOps {
       .observe(DedupOps.obsName(DedupOps.ObservedMetrics.NearDupVerifiedMetrics),
         count(lit(1)).as("verified_pairs"))
       .select(col("id_a"), col("id_b"), col("__cell").as("cell"), col("cos_sim"))
-    (result, release)
   }
 
   /** Semantic dedup: drop rows whose vector semantically duplicates a

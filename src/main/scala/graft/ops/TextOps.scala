@@ -298,16 +298,16 @@ object TextOps {
    * per-iteration loss curve.
    */
   def trainLinear(df: DataFrame, textCol: String, labelCol: String, dim: Int,
-                  iters: Int = 20, lr: Double = 1.0, l2: Double = 0.0,
-                  cache: Boolean = true): (Array[Double], Double) = {
-    val r = trainLinearModel(df, textCol, labelCol, dim, iters, lr, l2, cache)
+                  iters: Int = 20, lr: Double = 1.0,
+                  l2: Double = 0.0): (Array[Double], Double) = {
+    val r = trainLinearModel(df, textCol, labelCol, dim, iters, lr, l2)
     (r.weights, r.bias)
   }
 
   /**
    * Full-control in-engine logistic-regression trainer.
    *
-   * Scale shape: the corpus is tokenized and hashed ONCE into cached
+   * Scale shape: the corpus is tokenized and hashed ONCE into staged
    * sparse (bucket, tf) pairs; each iteration is ONE distributed
    * aggregation — the per-doc error `sigmoid(margin) - y` is computed
    * map-side by a native kernel whose current weights ride as a codegen
@@ -342,8 +342,8 @@ object TextOps {
    */
   def trainLinearModel(df: DataFrame, textCol: String, labelCol: String,
                        dim: Int, iters: Int = 20, lr: Double = 1.0,
-                       l2: Double = 0.0, cache: Boolean = true,
-                       tol: Double = 0.0, sampleFraction: Double = 1.0,
+                       l2: Double = 0.0, tol: Double = 0.0,
+                       sampleFraction: Double = 1.0,
                        seed: Long = 42L): LinearTrainResult = {
     require(dim >= 1 && dim <= MaxTrainDim,
       s"dim must be in [1, $MaxTrainDim] (8·dim-byte driver gradient), got $dim")
@@ -357,84 +357,81 @@ object TextOps {
     val yCol = tempName(df, "__y")
     val spCol = tempName(df, "__sp")
     val hCol = tempName(df, "__h")
-    val basePlain = df
+    val base = Snapshots.stage(df
       .where(col(textCol).isNotNull && col(labelCol).isNotNull)
       .select(col(labelCol).cast(DoubleType).as(yCol),
         hashingTfSparseVector(col(textCol), dim).as(spCol),
-        xxhash64(col(textCol)).as(hCol))
-    val base = if (cache) basePlain.persist() else basePlain
-    try {
-      val n = base.count() // materializes the cache too
-      require(n > 0, "trainLinear: no labeled rows to train on")
-      // hash-gate threshold over a fixed 2^20 lattice (exact for fraction 1)
-      val gateDen = 1L << 20
-      val gateNum = math.min(gateDen, math.ceil(sampleFraction * gateDen).toLong)
-      val w = new Array[Double](dim)
-      var b = 0.0
-      // bias rides as pseudo-bucket -1 with tf 1, appended at gradient time
-      // (NOT stored in spCol, which the margin kernel consumes)
-      val biasPair = array(struct(lit(-1L).as("bucket"), lit(1L).as("tf")))
-      val losses = Array.newBuilder[Double]
-      val batchSizes = Array.newBuilder[Long]
-      var prevLoss = Double.NaN
-      var it = 0
-      var stopped = false
-      while (it < iters && !stopped) {
-        val batch =
-          if (gateNum >= gateDen) base
-          else base.where(pmod(xxhash64(col(hCol), lit(seed + it)), lit(gateDen))
-            < lit(gateNum))
-        val margin = X.sparseMargin(col(spCol),
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(w), b)
-        val err = (lit(1.0) / (lit(1.0) + exp(-margin))) - col(yCol)
-        // stable per-doc logistic loss: softplus(m) − y·m
-        val lossDoc = greatest(margin, lit(0.0)) +
-          log1p(exp(-abs(margin))) - col(yCol) * margin
-        val grad = batch
-          .select(err.as("__err"), lossDoc.as("__loss"),
-            explode(concat(col(spCol), biasPair)).as("__bt"))
-          .groupBy(col("__bt.bucket").as("__bk"))
-          .agg(sum(col("__err") * col("__bt.tf")).as("__g"),
-            // per-doc payloads are only read off the bucket −1 group,
-            // where each doc appears exactly once
-            sum(when(col("__bt.bucket") === -1L, col("__loss"))).as("__l"),
-            count(when(col("__bt.bucket") === -1L, lit(1))).as("__c"))
-          .collect()
-        var gb = 0.0
-        var lossSum = 0.0
-        var nBatch = 0L
-        val gw = new Array[Double](dim)
-        grad.foreach { r =>
-          val k = r.getLong(0)
-          val v = r.getDouble(1)
-          if (k < 0) { gb = v; lossSum = r.getDouble(2); nBatch = r.getLong(3) }
-          else gw(k.toInt) = v
-        }
-        if (nBatch > 0) {
-          var i = 0
-          while (i < dim) {
-            w(i) -= lr * (gw(i) / nBatch + l2 * w(i))
-            i += 1
-          }
-          b -= lr * gb / nBatch
-          val curLoss = lossSum / nBatch
-          losses += curLoss
-          batchSizes += nBatch
-          if (tol > 0 && !prevLoss.isNaN &&
-              math.abs(prevLoss - curLoss) <=
-                tol * math.max(math.abs(prevLoss), 1e-12)) stopped = true
-          prevLoss = curLoss
-        }
-        // an empty hash-gated batch (tiny fraction, tiny corpus) is a
-        // no-op iteration for the WEIGHTS, but it still records a (NaN, 0)
-        // entry so losses(i)/batchSizes(i) always mean iteration i (the
-        // LinearTrainResult contract); prevLoss carries over, so tol
-        // compares the nearest REAL losses, never against NaN
-        if (nBatch == 0L) { losses += Double.NaN; batchSizes += 0L }
-        it += 1
+        xxhash64(col(textCol)).as(hCol)))
+    val n = base.count() // materializes the stage too
+    require(n > 0, "trainLinear: no labeled rows to train on")
+    // hash-gate threshold over a fixed 2^20 lattice (exact for fraction 1)
+    val gateDen = 1L << 20
+    val gateNum = math.min(gateDen, math.ceil(sampleFraction * gateDen).toLong)
+    val w = new Array[Double](dim)
+    var b = 0.0
+    // bias rides as pseudo-bucket -1 with tf 1, appended at gradient time
+    // (NOT stored in spCol, which the margin kernel consumes)
+    val biasPair = array(struct(lit(-1L).as("bucket"), lit(1L).as("tf")))
+    val losses = Array.newBuilder[Double]
+    val batchSizes = Array.newBuilder[Long]
+    var prevLoss = Double.NaN
+    var it = 0
+    var stopped = false
+    while (it < iters && !stopped) {
+      val batch =
+        if (gateNum >= gateDen) base
+        else base.where(pmod(xxhash64(col(hCol), lit(seed + it)), lit(gateDen))
+          < lit(gateNum))
+      val margin = X.sparseMargin(col(spCol),
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(w), b)
+      val err = (lit(1.0) / (lit(1.0) + exp(-margin))) - col(yCol)
+      // stable per-doc logistic loss: softplus(m) − y·m
+      val lossDoc = greatest(margin, lit(0.0)) +
+        log1p(exp(-abs(margin))) - col(yCol) * margin
+      val grad = batch
+        .select(err.as("__err"), lossDoc.as("__loss"),
+          explode(concat(col(spCol), biasPair)).as("__bt"))
+        .groupBy(col("__bt.bucket").as("__bk"))
+        .agg(sum(col("__err") * col("__bt.tf")).as("__g"),
+          // per-doc payloads are only read off the bucket −1 group,
+          // where each doc appears exactly once
+          sum(when(col("__bt.bucket") === -1L, col("__loss"))).as("__l"),
+          count(when(col("__bt.bucket") === -1L, lit(1))).as("__c"))
+        .collect()
+      var gb = 0.0
+      var lossSum = 0.0
+      var nBatch = 0L
+      val gw = new Array[Double](dim)
+      grad.foreach { r =>
+        val k = r.getLong(0)
+        val v = r.getDouble(1)
+        if (k < 0) { gb = v; lossSum = r.getDouble(2); nBatch = r.getLong(3) }
+        else gw(k.toInt) = v
       }
-      LinearTrainResult(w, b, it, losses.result(), batchSizes.result())
-    } finally if (cache) { base.unpersist(); () }
+      if (nBatch > 0) {
+        var i = 0
+        while (i < dim) {
+          w(i) -= lr * (gw(i) / nBatch + l2 * w(i))
+          i += 1
+        }
+        b -= lr * gb / nBatch
+        val curLoss = lossSum / nBatch
+        losses += curLoss
+        batchSizes += nBatch
+        if (tol > 0 && !prevLoss.isNaN &&
+            math.abs(prevLoss - curLoss) <=
+              tol * math.max(math.abs(prevLoss), 1e-12)) stopped = true
+        prevLoss = curLoss
+      }
+      // an empty hash-gated batch (tiny fraction, tiny corpus) is a
+      // no-op iteration for the WEIGHTS, but it still records a (NaN, 0)
+      // entry so losses(i)/batchSizes(i) always mean iteration i (the
+      // LinearTrainResult contract); prevLoss carries over, so tol
+      // compares the nearest REAL losses, never against NaN
+      if (nBatch == 0L) { losses += Double.NaN; batchSizes += 0L }
+      it += 1
+    }
+    LinearTrainResult(w, b, it, losses.result(), batchSizes.result())
   }
 
   /** Content-defined fingerprint: sha2-256 of the token-normalized text
@@ -445,17 +442,14 @@ object TextOps {
    * (context, token) counts plus the context marginals and the training
    * vocabulary size — everything [[ngramLogProbScore]] needs for
    * add-alpha-smoothed conditional probabilities. `grams` and `contexts`
-   * are distributed frames (the model can exceed any driver's memory);
-   * with the default `cache = true` the gram table is persisted — the
-   * context marginal derives FROM it, so an uncached model re-runs the
-   * full training aggregation TWICE per scoring query. Call
-   * [[NgramLm.unpersist]] when done with the model.
+   * are distributed frames (the model can exceed any driver's memory).
+   * The gram table is staged ([[Snapshots.stage]]): the context marginal
+   * derives FROM it, so an unstaged model would re-run the full training
+   * aggregation TWICE per scoring query. Its blocks go when the model
+   * does.
    */
   final case class NgramLm(n: Int, vocabSize: Long,
-                           grams: DataFrame, contexts: DataFrame) {
-    /** Release the cached gram table (no-op for `cache = false` models). */
-    def unpersist(): Unit = { grams.unpersist(); () }
-  }
+                           grams: DataFrame, contexts: DataFrame)
 
   /**
    * Train an n-gram LM over the hashed token stream — the CCNet-style
@@ -475,8 +469,7 @@ object TextOps {
    * aggregate, and nothing ever collects to the driver except the single
    * vocabulary-size scalar.
    */
-  def trainNgramLm(corpus: DataFrame, textCol: String, n: Int = 3,
-                   cache: Boolean = true): NgramLm = {
+  def trainNgramLm(corpus: DataFrame, textCol: String, n: Int = 3): NgramLm = {
     require(n >= 2, s"n must be >= 2 (unigrams have no context), got $n")
     val X = org.apache.spark.sql.catalyst.expressions.graftdedup.HashSketchExpressions
     val toksC = tokens(col(textCol))
@@ -488,11 +481,8 @@ object TextOps {
       .filter(size(col("__t")) >= n)
       .select(explode(X.ngramPairs(col("__t"), n)).as("__g"))
       .select(col("__g.ctx_h").as("ctx_h"), col("__g.tok_h").as("tok_h"))
-    val gramsPlain = pairs.groupBy(col("ctx_h"), col("tok_h"))
-      .agg(count(lit(1)).as("cnt"))
-    val grams = if (cache)
-      gramsPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else gramsPlain
+    val grams = Snapshots.stage(pairs.groupBy(col("ctx_h"), col("tok_h"))
+      .agg(count(lit(1)).as("cnt")))
     val contexts = grams.groupBy(col("ctx_h")).agg(sum(col("cnt")).as("ctx_cnt"))
     val vocabSize = corpus.select(explode(toksC).as("__tok"))
       .select(X.md5Hash31(col("__tok")).as("__h")).distinct().count()
@@ -581,16 +571,14 @@ object TextOps {
     // mid-landing retry with different parameters hits the n-check above.
     if (!metaExists || !spark.catalog.tableExists(s"${name}_grams")
         || !spark.catalog.tableExists(s"${name}_contexts")) {
-      val lm = trainNgramLm(corpus, textCol, n, cache = true)
-      try {
-        if (!metaExists)
-          graft.sources.IndexCatalog.writeMeta(spark, name, path,
-            Seq("n" -> lm.n, "vocab_size" -> lm.vocabSize))
-        graft.sources.BucketedLand.landOnce(lm.grams, s"${name}_grams",
-          "ctx_h", Seq("ctx_h", "tok_h"), buckets, path.map(p => s"${p}_grams"))
-        graft.sources.BucketedLand.landOnce(lm.contexts, s"${name}_contexts",
-          "ctx_h", Seq("ctx_h"), buckets, path.map(p => s"${p}_contexts"))
-      } finally lm.unpersist()
+      val lm = trainNgramLm(corpus, textCol, n)
+      if (!metaExists)
+        graft.sources.IndexCatalog.writeMeta(spark, name, path,
+          Seq("n" -> lm.n, "vocab_size" -> lm.vocabSize))
+      graft.sources.BucketedLand.landOnce(lm.grams, s"${name}_grams",
+        "ctx_h", Seq("ctx_h", "tok_h"), buckets, path.map(p => s"${p}_grams"))
+      graft.sources.BucketedLand.landOnce(lm.contexts, s"${name}_contexts",
+        "ctx_h", Seq("ctx_h"), buckets, path.map(p => s"${p}_contexts"))
     }
     }
   }
@@ -619,10 +607,7 @@ object TextOps {
    * every ratio flows through the row path in both engines.
    */
   final case class DsirModel(dim: Int, alpha: Double, nTarget: Long,
-                             nRaw: Long, ratios: DataFrame) {
-    /** Release the cached ratio table (no-op for `cache = false`). */
-    def unpersist(): Unit = { ratios.unpersist(); () }
-  }
+                             nRaw: Long, ratios: DataFrame)
 
   /** Hashed DSIR features of a text column: unigrams plus adjacent-token
     * bigrams, bucketed by the engine-portable md5-31 hash mod `dim` (the
@@ -657,8 +642,7 @@ object TextOps {
    * into scoring. Bodies never shuffle.
    */
   def trainDsir(target: DataFrame, raw: DataFrame, textCol: String,
-                dim: Int = 1 << 16, alpha: Double = 1.0,
-                cache: Boolean = true): DsirModel = {
+                dim: Int = 1 << 16, alpha: Double = 1.0): DsirModel = {
     require(dim >= 2 && dim <= (1 << 24),
       s"dim must be in [2, 2^24], got $dim")
     require(alpha > 0 && java.lang.Double.isFinite(alpha),
@@ -680,12 +664,9 @@ object TextOps {
     def lnMicro(cnt: Column, total: Long): Column =
       floor(log((cnt.cast(DoubleType) + lit(alpha)) /
         lit(total + alpha * dim)) * lit(1e6) + lit(0.5)).cast(LongType)
-    val ratiosPlain = dense.select(col("bucket"),
+    val ratios = Snapshots.stage(dense.select(col("bucket"),
       (lnMicro(col("__ct"), nT) - lnMicro(col("__cr"), nR))
-        .as("log_ratio_micro"))
-    val ratios = if (cache)
-      ratiosPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ratiosPlain
+        .as("log_ratio_micro")))
     DsirModel(dim, alpha, nT, nR, ratios)
   }
 
@@ -740,15 +721,13 @@ object TextOps {
     // crash between the meta write and the ratios landing self-heals —
     // the landNgramLm shape
     if (!metaExists || !spark.catalog.tableExists(s"${name}_ratios")) {
-      val model = trainDsir(target, raw, textCol, dim, alpha, cache = true)
-      try {
-        if (!metaExists)
-          graft.sources.IndexCatalog.writeMeta(spark, name, path,
-            Seq("dim" -> model.dim, "alpha" -> model.alpha,
-              "n_target" -> model.nTarget, "n_raw" -> model.nRaw))
-        graft.sources.BucketedLand.landOnce(model.ratios, s"${name}_ratios",
-          "bucket", Seq("bucket"), buckets, path.map(p => s"${p}_ratios"))
-      } finally model.unpersist()
+      val model = trainDsir(target, raw, textCol, dim, alpha)
+      if (!metaExists)
+        graft.sources.IndexCatalog.writeMeta(spark, name, path,
+          Seq("dim" -> model.dim, "alpha" -> model.alpha,
+            "n_target" -> model.nTarget, "n_raw" -> model.nRaw))
+      graft.sources.BucketedLand.landOnce(model.ratios, s"${name}_ratios",
+        "bucket", Seq("bucket"), buckets, path.map(p => s"${p}_ratios"))
     }
     }
   }

@@ -17,16 +17,14 @@ object IngestOps {
    * Read JSONL under `path` against a pinned `schema`; rows that fail to
    * parse or to type-coerce land in the QUARANTINE frame as their raw
    * line (PERMISSIVE + an explicit corrupt-record column), good rows
-   * come back exactly schema-shaped. Returns (good, quarantine, release).
+   * come back exactly schema-shaped. Returns (good, quarantine).
    *
-   * The parsed batch persists before the two filters: Spark disallows a
-   * query whose referenced columns are ONLY the internal corrupt-record
-   * column straight off a JSON scan (the quarantine projection is
-   * exactly that shape), and the cache also guarantees good/quarantine
-   * split ONE parse of the input. Call `release()` after both outputs
-   * are materialized. At real scale, land both sides in one pass
-   * (write good, write quarantine, then release) rather than holding
-   * the cache across further lineage.
+   * The parsed batch is staged ([[graft.ops.Snapshots.stage]]) before the
+   * two filters: Spark disallows a query whose referenced columns are
+   * ONLY the internal corrupt-record column straight off a JSON scan (the
+   * quarantine projection is exactly that shape), and the stage also
+   * guarantees good/quarantine split ONE parse of the input. Its blocks
+   * go once both outputs are unreachable.
    *
    * Scale shape: the parse is map-side (one InputPartition per file
    * split); quarantine is tiny by construction on a healthy feed and
@@ -36,19 +34,18 @@ object IngestOps {
   def readJsonlQuarantine(spark: SparkSession, path: String,
                           schema: StructType,
                           corruptCol: String = "_corrupt_record")
-      : (DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame) = {
     require(!schema.fieldNames.contains(corruptCol),
       s"schema must not already carry the corrupt-record column '$corruptCol'")
     val full = schema.add(corruptCol, StringType, nullable = true)
-    val parsed = spark.read
+    val parsed = graft.ops.Snapshots.stage(spark.read
       .schema(full)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .json(path))
     val good = parsed.filter(col(corruptCol).isNull).drop(corruptCol)
     val quarantine = parsed.filter(col(corruptCol).isNotNull)
       .select(col(corruptCol).as("raw_record"))
-    (good, quarantine, () => { parsed.unpersist(); () })
+    (good, quarantine)
   }
 }

@@ -1058,27 +1058,21 @@ object StreamOps {
       // each would re-evaluate the incoming plan (and a foreachBatch frame
       // re-evaluates back into the SOURCE on some sinks). One batch-sized
       // localCheckpoint collapses all of that to a single materialization.
+      // The within-batch shingle stage and both checkpoints are
+      // reachability-scoped: the ContextCleaner drops their blocks once
+      // this batch's frames are gone, so a long or crash-retrying stream
+      // accumulates none.
       val pinned = batch.localCheckpoint()
-      // Within-batch dedup holds the shingle-stage cache only for this
-      // invocation: nearDedup's fire-and-forget persist would accumulate a
-      // cached shingle table PER MICRO-BATCH for the life of the stream —
-      // the handle variant lets us release it once `accepted` is pinned.
-      val (inBatch, release) =
+      val inBatch =
         if (dedupWithinBatch) {
-          val (pairs, handle) = D.nearDuplicatePairsWithHandle(pinned, idCol,
-            textCol, numHashes, bands, shingleSize, threshold)
-          val losers = pairs.select(col("id_b").as(idCol)).distinct()
-          (pinned.join(losers, Seq(idCol), "left_anti"), handle)
-        } else (pinned, () => ())
-      // release in finally: a probe/checkpoint failure mid-attempt must
-      // not leak this attempt's shingle cache (CacheManager entries are
-      // not GC-collected — a crash-retrying stream would accumulate one
-      // per attempt, the exact leak the handle exists to prevent)
-      val accepted =
-        try D.nearDedupAgainstIndex(inBatch, idCol, textCol, name,
-            threshold, maxRefBucket)
-          .localCheckpoint()
-        finally release()
+          val losers = D.nearDuplicatePairs(pinned, idCol, textCol,
+              numHashes, bands, shingleSize, threshold)
+            .select(col("id_b").as(idCol)).distinct()
+          pinned.join(losers, Seq(idCol), "left_anti")
+        } else pinned
+      val accepted = D.nearDedupAgainstIndex(inBatch, idCol, textCol, name,
+          threshold, maxRefBucket)
+        .localCheckpoint()
       // sink FIRST (see the delivery note above): a doc may only enter the
       // index via an attempt that already delivered it
       sink(accepted, batchId)

@@ -25,8 +25,7 @@ class DsirSpec extends SparkTestBase {
 
   test("trainDsir: dense ratio table (exactly dim rows), totals count " +
        "every unigram+bigram feature occurrence") {
-    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 64,
-      cache = false)
+    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 64)
     assert(m.ratios.count() == 64L)
     // 10 tokens per target doc -> 10 unigrams + 9 bigrams = 19 each
     assert(m.nTarget == targetDocs.collect().map { r =>
@@ -37,8 +36,7 @@ class DsirSpec extends SparkTestBase {
 
   test("dsirScore ranks target-like pool docs above off-domain ones and " +
        "is invariant under repartitioning") {
-    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 1 << 12,
-      cache = false)
+    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 1 << 12)
     val scores = TextOps.dsirScore(poolDocs, "doc_id", "text", m)
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("logw_micro")).toMap
     // cooking-ish docs strictly above legal-ish docs
@@ -52,8 +50,7 @@ class DsirSpec extends SparkTestBase {
 
   test("dsirScore: null/token-free docs emit no row; n_features counts " +
        "unigrams + bigrams") {
-    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 64,
-      cache = false)
+    val m = TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 64)
     val docs = Seq((20L, "one two three"), (21L, null.asInstanceOf[String]),
       (22L, "!!! ???")).toDF("doc_id", "text")
     val got = TextOps.dsirScore(docs, "doc_id", "text", m).collect()
@@ -124,8 +121,7 @@ class DsirSpec extends SparkTestBase {
       TextOps.landDsir(targetDocs, poolDocs, "text", idx, dim = 1 << 10,
         path = Some(s"$tmp/$idx"))
       val direct = TextOps.dsirScore(poolDocs, "doc_id", "text",
-        TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 1 << 10,
-          cache = false))
+        TextOps.trainDsir(targetDocs, poolDocs, "text", dim = 1 << 10))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val indexed = TextOps.dsirScoreIndexed(poolDocs, "doc_id", "text", idx)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -692,21 +692,9 @@ class PipelineOpsSpec extends SparkTestBase {
       s"exactly the shared-frame pair at Hamming 0: ${pairs.toSeq}")
   }
 
-  test("nearDuplicatePairsWithHandle: unpersist handle leaves no cached blocks") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (pairs, done) = DedupOps.nearDuplicatePairsWithHandle(docs, "doc_id", "text",
-      numHashes = 64, bands = 32, threshold = 0.5)
-    assert(pairs.count() > 0)
-    done()
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty, s"lingering cached RDDs after unpersist handle: $after")
-  }
-
-  test("every *WithHandle op caches its staged input while the result is " +
-       "in use, and its handle leaves no cached blocks") {
-    // inputs no other test caches: a plan another test left cached would
-    // make persist() a no-op here and hide the cache under test
-    val text = "release handles free the staged cache of every dedup op"
+  test("every staging op holds its staged input only while its result is " +
+       "reachable") {
+    val text = "staged inputs live exactly as long as the result of the op"
     val pairDocs = Seq((0L, text), (1L, text + " today"),
       (2L, "completely unrelated content about parquet footer caching"))
       .toDF("doc_id", "text")
@@ -725,55 +713,55 @@ class PipelineOpsSpec extends SparkTestBase {
     // ten distinct directions plus one exact copy of vector 0
     val vecs = ((0 until 10).map(i => (i.toLong, Seq(math.cos(i * 0.3), math.sin(i * 0.3)))) :+
       ((100L, Seq(1.0, 0.0)))).toDF("vec_id", "embedding")
-    // (op, cached stages it must hold while in use, rows it must return)
-    val cases: Seq[(String, () => (org.apache.spark.sql.DataFrame, () => Unit), Int, Long)] = Seq(
-      ("nearDuplicatePairsWithHandle", () => DedupOps.nearDuplicatePairsWithHandle(
+    // (op, stages it must hold while in use, rows it must return)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, Int, Long)] = Seq(
+      ("nearDuplicatePairs", () => DedupOps.nearDuplicatePairs(
         pairDocs, "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.5), 1, 1L),
-      ("nearDedupAgainstWithHandle", () => DedupOps.nearDedupAgainstWithHandle(
+      ("nearDedupAgainst", () => DedupOps.nearDedupAgainst(
         incoming, "doc_id", "text", landed, "body",
         numHashes = 64, bands = 16, threshold = 0.5), 2, 1L),
-      ("contaminatedIdsBloomWithHandle", () => DedupOps.contaminatedIdsBloomWithHandle(
+      ("contaminatedIdsBloom", () => DedupOps.contaminatedIdsBloom(
         probeDocs, "doc_id", "text", probes, "text", shingleSize = 5), 1, 1L),
-      ("duplicateSpansWithHandle", () => DedupOps.duplicateSpansWithHandle(
+      ("duplicateSpans", () => DedupOps.duplicateSpans(
         spanDocs, "doc_id", "text", k = 8), 1, 2L),
-      ("stripDuplicateSpansWithHandle", () => DedupOps.stripDuplicateSpansWithHandle(
+      ("stripDuplicateSpans", () => DedupOps.stripDuplicateSpans(
         spanDocs, "doc_id", "text", k = 8), 1, 3L),
-      ("semanticDedupPairsWithHandle", () => SimOps.semanticDedupPairsWithHandle(
+      ("semanticDedupPairs", () => SimOps.semanticDedupPairs(
         vecs, "vec_id", "embedding", threshold = 0.9999, nCells = 2), 1, 1L))
-    cases.foreach { case (name, run, cached, rows) =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val (result, done) = run()
-      try {
-        assert(result.collect().length == rows, s"$name: row count")
-        val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-        assert(during.size >= cached,
-          s"$name: expected $cached cached stage(s) while in use, got $during")
-      } finally done()
-      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(after.isEmpty, s"$name: lingering cached RDDs after the handle: $after")
+    // the result is referenced only inside this frame
+    def inUse(run: () => org.apache.spark.sql.DataFrame, before: Set[Int]): (Long, Int) = {
+      val result = run()
+      (result.collect().length.toLong, (PersistedRdds.ids(spark) -- before).size)
+    }
+    cases.foreach { case (name, run, staged, rows) =>
+      val before = PersistedRdds.ids(spark)
+      val (n, held) = inUse(run, before)
+      assert(n == rows, s"$name: row count")
+      assert(held >= staged,
+        s"$name: expected $staged staged RDD(s) while in use, got $held")
+      val left = PersistedRdds.leftAfterGc(spark, before)
+      assert(left.isEmpty, s"$name: persisted RDDs left once the result is dropped: $left")
     }
   }
 
-  test("a *WithHandle handle leaves in place a cache an earlier call made " +
-       "on the same staged plan") {
-    val own = Seq((0L, "handles release only the cache they staged themselves"),
-      (1L, "handles release only the cache they staged themselves today"),
-      (2L, "unrelated words about bucketed parquet scans"))
-      .toDF("doc_id", "text")
-    // the staged (id, shingles) plan nearDuplicatePairs persists
-    val staged = own.select(col("doc_id"), DedupOps.shingles(col("text"), 3).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-    try {
-      assert(DedupOps.nearDuplicatePairs(own, "doc_id", "text",
-        numHashes = 64, bands = 32, threshold = 0.5).count() == 1)
-      assert(staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "nearDuplicatePairs should leave its staged plan cached")
-      val (pairs, done) = DedupOps.nearDuplicatePairsWithHandle(own, "doc_id", "text",
-        numHashes = 64, bands = 32, threshold = 0.5)
-      try assert(pairs.count() == 1) finally done()
-      assert(staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "the handle dropped a cache entry it did not make")
-    } finally staged.unpersist()
+  test("Snapshots.stage computes its input once across a self-join and a " +
+       "second action") {
+    val evals = spark.sparkContext.longAccumulator("stage evaluations")
+    val tag = udf((i: Long) => { evals.add(1); i % 97 }).asNondeterministic()
+    val before = PersistedRdds.ids(spark)
+    def useTwice(): Unit = {
+      val staged = graft.ops.Snapshots.stage(
+        spark.range(20000).select(col("id"), tag(col("id")).as("v")))
+      val self = staged.as("a").join(staged.as("b"), col("a.id") === col("b.id"))
+        .filter(col("a.v") === col("b.v"))
+      assert(self.count() == 20000L)
+      assert(staged.agg(sum(col("v"))).head().getLong(0) ==
+        (0L until 20000L).map(_ % 97).sum)
+    }
+    useTwice()
+    assert(evals.value == 20000L, s"the UDF ran ${evals.value} times")
+    val left = PersistedRdds.leftAfterGc(spark, before)
+    assert(left.isEmpty, s"persisted RDDs left once the stage is dropped: $left")
   }
 
   test("near-dup docs with null text are skipped, not banded (overflow guard)") {
@@ -1483,23 +1471,6 @@ class PipelineOpsSpec extends SparkTestBase {
       "1024-bit sketch over 3 items should reject a non-member")
   }
 
-  test("contaminatedIdsBloomWithHandle: handle releases the probe cache " +
-       "it staged") {
-    import spark.implicits._
-    val docs = Seq((0L, "alpha beta gamma delta epsilon"),
-                   (1L, "totally different words here now")).toDF("doc_id", "text")
-    val probes = Seq("alpha beta gamma delta epsilon").toDF("text")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ids, done) = DedupOps.contaminatedIdsBloomWithHandle(
-      docs, "doc_id", "text", probes, "text", shingleSize = 5)
-    assert(ids.collect().map(_.getLong(0)).toSet == Set(0L))
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.nonEmpty, "probe shingles should be cached while in use")
-    done()
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty, s"lingering cached RDDs after unpersist handle: $after")
-  }
-
   test("resampleToMixture: deterministic upsampling hits target mixture, " +
        "unlisted sources drop, epochs are dense") {
     import spark.implicits._
@@ -1689,10 +1660,10 @@ class PipelineOpsSpec extends SparkTestBase {
       // null text -> passes through
       (13L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
-    val (kept, done) = DedupOps.nearDedupAgainstWithHandle(
-      incoming, "doc_id", "text", landed, "body",
-      numHashes = 64, bands = 16, threshold = 0.5)
-    val ids = try kept.collect().map(_.getLong(0)).toSet finally done()
+    val ids = DedupOps.nearDedupAgainst(
+        incoming, "doc_id", "text", landed, "body",
+        numHashes = 64, bands = 16, threshold = 0.5)
+      .collect().map(_.getLong(0)).toSet
     assert(ids == Set(12L, 13L), s"got $ids")
     // landed near-dups must NOT dedup the increment against itself: two
     // mutually-similar incoming docs both far from the landed corpus stay
@@ -1732,11 +1703,10 @@ class PipelineOpsSpec extends SparkTestBase {
       numHashes = 64, bands = 16, shingleSize = 3)
     val viaIndex = DedupOps.nearDedupAgainstIndex(
       incoming, "doc_id", "text", idx, threshold = 0.5)
-    val (direct, releaseDirect) = DedupOps.nearDedupAgainstWithHandle(
-      incoming, "doc_id", "text", landed, "body",
-      numHashes = 64, bands = 16, threshold = 0.5)
-    val directIds =
-      try direct.collect().map(_.getLong(0)).toSet finally releaseDirect()
+    val directIds = DedupOps.nearDedupAgainst(
+        incoming, "doc_id", "text", landed, "body",
+        numHashes = 64, bands = 16, threshold = 0.5)
+      .collect().map(_.getLong(0)).toSet
     val gotIdx = viaIndex.collect().map(_.getLong(0)).toSet
     assert(gotIdx == Set(101L, 102L), s"got $gotIdx")
     assert(gotIdx == directIds,

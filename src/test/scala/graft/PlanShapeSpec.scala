@@ -250,58 +250,56 @@ class PlanShapeSpec extends SparkTestBase {
     // the 'UDF' substring in plan text.
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     val dir = "/root/testdata/sf0.001"
-    try {
-      // q37 joined this list when section's station-distance UDF became
-      // column haversine algebra (the last ScalaUDF in an operator path)
-      Seq("q25_near_dup_pairs", "q27_simhash", "q31_langid", "q32_quality",
-          "q37_section", "q44_repetition", "q45_hash_split",
-          "q49_stratified_sample", "q50_pack_sequences",
-          "q51_vocabulary",
-          // round-9 families: semantic dedup, duplicate spans, ngram LM,
-          // corpus diff, BPE — all native expressions / column algebra
-          "q79_semantic_pairs", "q80_semantic_dedup", "q81_duplicate_spans",
-          "q82_strip_spans", "q83_ngram_lm_score", "q84_corpus_diff",
-          "q86_bpe_tokenize",
-          // late round-9 families: event sessions/windows, random
-          // projection, shard manifests, token-weighted mixture — window
-          // algebra, mat_project, and hash/CASE column chains throughout
-          "q88_sessions", "q89_windowed_events", "q90_sessionize",
-          "q91_random_projection", "q92_ann_projected", "q93_shard_manifest",
-          "q94_mixture_tokens", "q95_distinct_tokens", "q96_funnel",
-          "q97_retention",
-          // wave-3 families: BM25 scoring, skew profiling, transitions,
-          // blocked fuzzy join, curriculum — column algebra end to end
-          "q98_bm25", "q101_key_skew", "q102_transitions",
-          "q103_fuzzy_join", "q104_curriculum",
-          // wave-4 families: salted/interval joins (hash + explode column
-          // algebra), CMS sketch (md5-31 buckets), fixed-point pagerank,
-          // z-score standardization, markup regex pipeline
-          "q109_salted_join", "q110_interval_join", "q111_cms_heavy_hitters",
-          "q112_pagerank", "q113_standardize_embeddings",
-          "q114_markup_strip", "q116_weighted_topk",
-          "q117_corpus_report", "q119_winsorize",
-          "q120_script_mix",
-          // wave-5 families: column profiler (stack over one agg), URL
-          // regex pipeline, contamination counts — column algebra only
-          "q122_profile_columns", "q124_url_dedup",
-          "q125_contamination_report",
-          // wave-6 families: c-TF-IDF, PSI drift, hopping windows —
-          // micro-nat/pico-nat quantized column algebra end to end
-          "q130_distinctive_terms", "q131_token_drift",
-          "q133_hopping_windows",
-          // wave-7 families: prefix-filtered set join, join-size
-          // pre-flight, session paths, mergeable profiles
-          "q134_set_similarity_join", "q135_join_cardinality",
-          "q136_session_paths", "q137_profile_segments",
-          // composition queries: window algebra + broadcast stats joins
-          "q138_rate_spikes",
-          // positional phrase search: term-filtered postings equi-joins
-          "q140_phrase_search", "q141_vocab_coverage").foreach { q =>
-        val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
-        val hasUdf = plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])))
-        assert(!hasUdf, s"$q plan contains a ScalaUDF:\n$plan")
-      }
-    } finally spark.catalog.clearCache() // building q25 registers a persist
+    // q37 joined this list when section's station-distance UDF became
+    // column haversine algebra (the last ScalaUDF in an operator path)
+    Seq("q25_near_dup_pairs", "q27_simhash", "q31_langid", "q32_quality",
+        "q37_section", "q44_repetition", "q45_hash_split",
+        "q49_stratified_sample", "q50_pack_sequences",
+        "q51_vocabulary",
+        // round-9 families: semantic dedup, duplicate spans, ngram LM,
+        // corpus diff, BPE — all native expressions / column algebra
+        "q79_semantic_pairs", "q80_semantic_dedup", "q81_duplicate_spans",
+        "q82_strip_spans", "q83_ngram_lm_score", "q84_corpus_diff",
+        "q86_bpe_tokenize",
+        // late round-9 families: event sessions/windows, random
+        // projection, shard manifests, token-weighted mixture — window
+        // algebra, mat_project, and hash/CASE column chains throughout
+        "q88_sessions", "q89_windowed_events", "q90_sessionize",
+        "q91_random_projection", "q92_ann_projected", "q93_shard_manifest",
+        "q94_mixture_tokens", "q95_distinct_tokens", "q96_funnel",
+        "q97_retention",
+        // wave-3 families: BM25 scoring, skew profiling, transitions,
+        // blocked fuzzy join, curriculum — column algebra end to end
+        "q98_bm25", "q101_key_skew", "q102_transitions",
+        "q103_fuzzy_join", "q104_curriculum",
+        // wave-4 families: salted/interval joins (hash + explode column
+        // algebra), CMS sketch (md5-31 buckets), fixed-point pagerank,
+        // z-score standardization, markup regex pipeline
+        "q109_salted_join", "q110_interval_join", "q111_cms_heavy_hitters",
+        "q112_pagerank", "q113_standardize_embeddings",
+        "q114_markup_strip", "q116_weighted_topk",
+        "q117_corpus_report", "q119_winsorize",
+        "q120_script_mix",
+        // wave-5 families: column profiler (stack over one agg), URL
+        // regex pipeline, contamination counts — column algebra only
+        "q122_profile_columns", "q124_url_dedup",
+        "q125_contamination_report",
+        // wave-6 families: c-TF-IDF, PSI drift, hopping windows —
+        // micro-nat/pico-nat quantized column algebra end to end
+        "q130_distinctive_terms", "q131_token_drift",
+        "q133_hopping_windows",
+        // wave-7 families: prefix-filtered set join, join-size
+        // pre-flight, session paths, mergeable profiles
+        "q134_set_similarity_join", "q135_join_cardinality",
+        "q136_session_paths", "q137_profile_segments",
+        // composition queries: window algebra + broadcast stats joins
+        "q138_rate_spikes",
+        // positional phrase search: term-filtered postings equi-joins
+        "q140_phrase_search", "q141_vocab_coverage").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val hasUdf = plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])))
+      assert(!hasUdf, s"$q plan contains a ScalaUDF:\n$plan")
+    }
   }
 
   test("q47 bucketed QC chain: no hash exchange between land and windows") {

@@ -129,15 +129,12 @@ class ScalingMetricsSpec extends SparkTestBase {
     def density(factor: Int): (Double, Long) = {
       val scaled =
         if (factor == 1) base else ScaleUp.scaleDocuments(base, factor)
-      val (spans, done) = DedupOps.duplicateSpansWithHandle(
-        scaled, "doc_id", "text", k = 8)
-      try {
-        val (_, metrics) = ScalingProbe.runWithMetrics(spark, spans,
-          waitForPrefix = DedupOps.ObservedMetrics.SpanMetrics)
-        val agg = ScalingProbe.aggregate(metrics)
-        (agg("dup_positions").toDouble / (150L * factor),
-          agg("dup_grams"))
-      } finally done()
+      val spans = DedupOps.duplicateSpans(scaled, "doc_id", "text", k = 8)
+      val (_, metrics) = ScalingProbe.runWithMetrics(spark, spans,
+        waitForPrefix = DedupOps.ObservedMetrics.SpanMetrics)
+      val agg = ScalingProbe.aggregate(metrics)
+      (agg("dup_positions").toDouble / (150L * factor),
+        agg("dup_grams"))
     }
     val (d2, g2) = density(2)
     val (d6, g6) = density(6)

@@ -113,21 +113,19 @@ class ShardSpec extends SparkTestBase {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("n_tokens", LongType)))
-    val (good, quarantine, release) =
+    val (good, quarantine) =
       graft.sources.IngestOps.readJsonlQuarantine(spark, dir, schema)
-    try {
-      val q = quarantine.collect().map(_.getString(0))
-      assert(q.length == 3, s"got ${q.toSeq}")
-      assert(q.exists(_.contains("not json")) &&
-        q.exists(_.contains("NaN")) && q.exists(_.contains("trunc")),
-        s"raw lines must surface verbatim: ${q.toSeq}")
-      val got = good.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val want = corpus.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(got == want, "round-trip must be lossless")
-      assert(good.columns.toSeq == Seq("doc_id", "text", "n_tokens"))
-    } finally release()
+    val q = quarantine.collect().map(_.getString(0))
+    assert(q.length == 3, s"got ${q.toSeq}")
+    assert(q.exists(_.contains("not json")) &&
+      q.exists(_.contains("NaN")) && q.exists(_.contains("trunc")),
+      s"raw lines must surface verbatim: ${q.toSeq}")
+    val got = good.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val want = corpus.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(got == want, "round-trip must be lossless")
+    assert(good.columns.toSeq == Seq("doc_id", "text", "n_tokens"))
     intercept[IllegalArgumentException] {
       graft.sources.IngestOps.readJsonlQuarantine(spark, dir,
         schema.add("_corrupt_record", StringType))

@@ -1154,12 +1154,12 @@ class StreamingSpec extends SparkTestBase {
       .json(dir)
       .writeStream
       .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, _: Long) =>
-        val cached = bdf.persist()
-        good ++= cached.filter(col("_corrupt_record").isNull)
+        val staged = graft.ops.Snapshots.stage(bdf)
+        good ++= staged.filter(col("_corrupt_record").isNull)
           .collect().map(r => (r.getLong(0), r.getString(1)))
-        bad ++= cached.filter(col("_corrupt_record").isNotNull)
+        bad ++= staged.filter(col("_corrupt_record").isNotNull)
           .collect().map(_.getAs[String]("_corrupt_record"))
-        cached.unpersist(); ()
+        ()
       }
       .start()
     try {
