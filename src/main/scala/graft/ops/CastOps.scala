@@ -249,13 +249,17 @@ object Cast {
               valueCols: Seq[String], n1: Double = 2.0, n2: Double = 20.0,
               block: Int = 100,
               refExact: Boolean = false): DataFrame = {
+    require(block > 0, s"despike: block must be positive, got $block")
     // Execution strategy: a per-cast SEQUENTIAL kernel (the SeqOps
     // pattern), not a window plan. The sliding-frame rolling stats are
     // O(rows x block) arithmetic either way, but WindowExec re-aggregates
     // each frame through un-codegen'd aggregate buffers — measured ~6x
-    // slower per core than this fused primitive loop on the 4-cast
-    // 330k-row QC-chain benchmark (BenchChain; the reference's numpy
-    // stride-tricks rolling is the same O(n*w) in C). The kernel node
+    // slower per core than a one-window-at-a-time primitive loop on the
+    // 4-cast 330k-row QC-chain benchmark (BenchChain; the reference's
+    // numpy stride-tricks rolling is the same O(n*w) in C). `stats`
+    // below sweeps four windows at once, which took perfbench's traced
+    // qc_cruise despike step from 0.47 to 0.20 s a pass on a 4-core
+    // box (32 casts x 26 channels x 1,500 rows, block 100). The kernel node
     // clusters on castCol only where its input is not already clustered
     // there (a bucketed scan, an upstream kernel or window on castCol),
     // reads only the value columns and passes the rest through;
@@ -276,18 +280,124 @@ object Cast {
       g =>
         val n = g.length
         val idx0 = math.max(0, n - block) // last full-window start (0-based)
-        // forward-window mean/stddev_pop at every row of (v, vNull),
+        // forward-window mean/stddev_pop at rows [0, idx0] of (v, vNull),
         // replicating Spark's agg recurrences (sum/count for avg;
-        // CentralMomentAgg delta/deltaN/m2 for stddev_pop) in frame order
+        // CentralMomentAgg delta/deltaN/m2 for stddev_pop) in frame order;
+        // pass() never reads past idx0 (tail rows reuse the stats there).
+        // Each window's update is one serial chain (subtract -> divide ->
+        // add), so the loop is bound by latency: one sweep over j < block
+        // advances FOUR windows (i .. i+3), whose chains are independent
+        // and overlap in the pipeline. Each lane keeps its own state and
+        // runs its operations in exactly the single-window order, so its
+        // bits are those of the leftover loop and of the windowed plan.
+        // The counters are doubles: counts below 2^53 are exact, `delta /
+        // cnt` is the same IEEE division as with a long count, and no
+        // long->double convert sits on the chain. The lanes are spelled
+        // out: a local helper over these vars would box them (DoubleRef),
+        // and lane-state arrays lose the overlap.
         def stats(v: Array[Double], vNull: Array[Boolean])
             : (Array[Double], Array[Double], Array[Boolean]) = {
           val m = new Array[Double](n)
           val s = new Array[Double](n)
           val empty = new Array[Boolean](n)
+          def finish(i: Int, cnt: Double, sum: Double, aM2: Double,
+                     lo: Double, hi: Double, sawNaN: Boolean): Unit =
+            // sawNaN disables the guard for parity with the windowed
+            // form, where max() returns NaN (NaN sorts greatest) and the
+            // lo===hi test goes false on any NaN-containing window
+            if (cnt == 0) empty(i) = true
+            else if (!sawNaN && lo == hi) {
+              // EXACTLY-CONSTANT window (r14): the recurrences below give
+              // mean = c +- rounding and a variance that can cancel to 0,
+              // so |c - mean| lands at ~1e-14 > n*0 and a whole constant
+              // plateau gets flagged — 6,513 binned cells of the q181b
+              // step-quantized channels, measured. The reference's numpy
+              // two-pass never flags a constant window (its residual is
+              // |d| and its threshold n*|d| with n>=1, for whatever
+              // rounding d its pairwise mean commits), so the exact
+              // mean = c, std = 0 here reproduces the reference decision
+              // for every in-window point (0 > 0 false -> keep) and for
+              // any realistic out-of-window point (both sides flag
+              // anything differing from c by more than ~2 ulp).
+              m(i) = lo; s(i) = 0.0
+            }
+            else { m(i) = sum / cnt; s(i) = math.sqrt(aM2 / cnt) }
           var i = 0
-          while (i < n) {
+          // four full windows [i+l, i+l+block): i+3 <= idx0 implies
+          // n >= block + 3, so every one of them lies inside the cast
+          while (i + 3 <= idx0) {
+            var c0 = 0.0; var s0 = 0.0; var a0 = 0.0; var q0 = 0.0
+            var lo0 = Double.NaN; var hi0 = Double.NaN; var nan0 = false
+            var c1 = 0.0; var s1 = 0.0; var a1 = 0.0; var q1 = 0.0
+            var lo1 = Double.NaN; var hi1 = Double.NaN; var nan1 = false
+            var c2 = 0.0; var s2 = 0.0; var a2 = 0.0; var q2 = 0.0
+            var lo2 = Double.NaN; var hi2 = Double.NaN; var nan2 = false
+            var c3 = 0.0; var s3 = 0.0; var a3 = 0.0; var q3 = 0.0
+            var lo3 = Double.NaN; var hi3 = Double.NaN; var nan3 = false
+            var j = i
+            val end = i + block
+            while (j < end) {
+              if (!vNull(j)) {
+                val x = v(j)
+                c0 += 1
+                s0 += x
+                val d = x - a0
+                val dN = d / c0
+                a0 += dN
+                q0 += d * (d - dN)
+                if (x != x) nan0 = true
+                else if (c0 == 1 || lo0 != lo0) { lo0 = x; hi0 = x }
+                else { if (x < lo0) lo0 = x; if (x > hi0) hi0 = x }
+              }
+              if (!vNull(j + 1)) {
+                val x = v(j + 1)
+                c1 += 1
+                s1 += x
+                val d = x - a1
+                val dN = d / c1
+                a1 += dN
+                q1 += d * (d - dN)
+                if (x != x) nan1 = true
+                else if (c1 == 1 || lo1 != lo1) { lo1 = x; hi1 = x }
+                else { if (x < lo1) lo1 = x; if (x > hi1) hi1 = x }
+              }
+              if (!vNull(j + 2)) {
+                val x = v(j + 2)
+                c2 += 1
+                s2 += x
+                val d = x - a2
+                val dN = d / c2
+                a2 += dN
+                q2 += d * (d - dN)
+                if (x != x) nan2 = true
+                else if (c2 == 1 || lo2 != lo2) { lo2 = x; hi2 = x }
+                else { if (x < lo2) lo2 = x; if (x > hi2) hi2 = x }
+              }
+              if (!vNull(j + 3)) {
+                val x = v(j + 3)
+                c3 += 1
+                s3 += x
+                val d = x - a3
+                val dN = d / c3
+                a3 += dN
+                q3 += d * (d - dN)
+                if (x != x) nan3 = true
+                else if (c3 == 1 || lo3 != lo3) { lo3 = x; hi3 = x }
+                else { if (x < lo3) lo3 = x; if (x > hi3) hi3 = x }
+              }
+              j += 1
+            }
+            finish(i, c0, s0, q0, lo0, hi0, nan0)
+            finish(i + 1, c1, s1, q1, lo1, hi1, nan1)
+            finish(i + 2, c2, s2, q2, lo2, hi2, nan2)
+            finish(i + 3, c3, s3, q3, lo3, hi3, nan3)
+            i += 4
+          }
+          // the leftover windows (fewer than four, or the one partial
+          // window of a cast shorter than block), one at a time
+          while (i <= idx0) {
             val end = math.min(i + block, n)
-            var cnt = 0L; var sum = 0.0
+            var cnt = 0.0; var sum = 0.0
             var aAvg = 0.0; var aM2 = 0.0
             var lo = Double.NaN; var hi = Double.NaN
             var sawNaN = false
@@ -307,26 +417,7 @@ object Cast {
               }
               j += 1
             }
-            // sawNaN disables the guard for parity with the windowed
-            // form, where max() returns NaN (NaN sorts greatest) and the
-            // lo===hi test goes false on any NaN-containing window
-            if (cnt == 0) empty(i) = true
-            else if (!sawNaN && lo == hi) {
-              // EXACTLY-CONSTANT window (r14): the recurrences above give
-              // mean = c +- rounding and a variance that can cancel to 0,
-              // so |c - mean| lands at ~1e-14 > n*0 and a whole constant
-              // plateau gets flagged — 6,513 binned cells of the q181b
-              // step-quantized channels, measured. The reference's numpy
-              // two-pass never flags a constant window (its residual is
-              // |d| and its threshold n*|d| with n>=1, for whatever
-              // rounding d its pairwise mean commits), so the exact
-              // mean = c, std = 0 here reproduces the reference decision
-              // for every in-window point (0 > 0 false -> keep) and for
-              // any realistic out-of-window point (both sides flag
-              // anything differing from c by more than ~2 ulp).
-              m(i) = lo; s(i) = 0.0
-            }
-            else { m(i) = sum / cnt; s(i) = math.sqrt(aM2 / cnt) }
+            finish(i, cnt, sum, aM2, lo, hi, sawNaN)
             i += 1
           }
           (m, s, empty)

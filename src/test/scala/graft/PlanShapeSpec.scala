@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Cast, DedupOps}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftkernel.RddStage
+
+import graft.ops.{Cast, DedupOps, Snapshots}
 
 /** Regression tests for the plan shapes the scale design depends on
   * (SURVEY §9): exchange reuse across chained per-cast ops, digest-keyed
@@ -15,6 +19,15 @@ class PlanShapeSpec extends SparkTestBase {
 
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
+
+  /** True when `plan`, or a frame staged under one of its leaves by
+    * `Snapshots.stage` (the leaf's `RddStage.StagedPlan` tag), holds a
+    * ScalaUDF. Node-class check, not string matching: a NAMED ScalaUDF
+    * renders without the 'UDF' substring in plan text. */
+  private def hasScalaUdf(plan: LogicalPlan): Boolean =
+    plan.exists(p =>
+      p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) ||
+      p.getTagValue(RddStage.StagedPlan).exists(hasScalaUdf))
 
   test("despike's 8 window stages share ONE hash exchange") {
     val plan = Cast.despike(events, "user_id", "event_id", Seq("value"), 2, 20, 16)
@@ -245,10 +258,8 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("pipeline query plans contain no ScalaUDF nodes (native kernels only)") {
     // pins the no-UDF-boundary guarantee: shingling, sketches, sampling,
-    // band keys, text signals all run as native codegen expressions. Node-
-    // class check, not string matching — a NAMED ScalaUDF renders without
-    // the 'UDF' substring in plan text.
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    // band keys, text signals all run as native codegen expressions,
+    // inside staged inputs too
     val dir = "/root/testdata/sf0.001"
     // q37 joined this list when section's station-distance UDF became
     // column haversine algebra (the last ScalaUDF in an operator path)
@@ -297,9 +308,31 @@ class PlanShapeSpec extends SparkTestBase {
         // positional phrase search: term-filtered postings equi-joins
         "q140_phrase_search", "q141_vocab_coverage").foreach { q =>
       val plan = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
-      val hasUdf = plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])))
-      assert(!hasUdf, s"$q plan contains a ScalaUDF:\n$plan")
+      assert(!hasScalaUdf(plan), s"$q plan contains a ScalaUDF:\n$plan")
     }
+  }
+
+  test("the ScalaUDF check sees a UDF planted under Snapshots.stage") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val len = udf((s: String) => if (s == null) 0 else s.length)
+    val staged = Snapshots.stage(
+      docs.select(col("doc_id"), len(col("text")).as("n")))
+    val plan = staged.filter(col("n") > 0).queryExecution.optimizedPlan
+    // the stage is a leaf: its UDF is not among the plan's own expressions
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+      plan)
+    assert(hasScalaUdf(plan), s"staged UDF not found:\n$plan")
+    // and one stage deeper
+    val twice = Snapshots.stage(staged.filter(col("n") > 1))
+      .queryExecution.optimizedPlan
+    assert(hasScalaUdf(twice), s"doubly staged UDF not found:\n$twice")
+    // a listed query's stages are open to the walk too: every staged leaf
+    // of q25 (its shingles, a self-joined stage among them) keeps its tag
+    val q25 = SparkEntry.queries("q25_near_dup_pairs")(spark,
+      "/root/testdata/sf0.001").queryExecution.optimizedPlan
+    val leaves = q25.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+    assert(leaves.nonEmpty &&
+      leaves.forall(_.getTagValue(RddStage.StagedPlan).isDefined), q25)
   }
 
   test("q47 bucketed QC chain: no hash exchange between land and windows") {
