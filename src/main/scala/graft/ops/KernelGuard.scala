@@ -35,7 +35,8 @@ import org.apache.spark.sql.types.StructField
  * The default cap (2M rows) is ~200x the documented cast size yet well
  * under a task's share of executor memory; raise per-session via
  * `spark.conf.set("graft.kernel.maxGroupRows", n)` for genuinely huge
- * casts. The happy path pays one integer compare per row.
+ * casts. A value that is not a positive integer fails when the op is
+ * built, naming the key. The happy path pays one integer compare per row.
  */
 object KernelGuard {
   val ConfKey = "graft.kernel.maxGroupRows"
@@ -53,7 +54,9 @@ object KernelGuard {
                    appends: Seq[StructField], keepRows: Boolean, op: String)(
                    kernel: GroupRows => Iterator[InternalRow]): DataFrame = {
     // resolved at PLAN time (driver side): the node carries an Int
-    val cap = df.sparkSession.conf.get(ConfKey, DefaultMaxGroupRows.toString).toInt
+    val raw = df.sparkSession.conf.get(ConfKey, DefaultMaxGroupRows.toString)
+    val cap = raw.toIntOption.getOrElse(0)
+    require(cap > 0, s"$ConfKey must be a positive integer, got '$raw'")
     GroupKernel(df, op, keyCol, orderCols, reads, rewrites, appends, keepRows,
       cap)(kernel)
   }

@@ -82,13 +82,6 @@ object SearchOps {
     matches.groupBy(col(idCol)).agg(count(lit(1)).as("n_matches"))
   }
 
-  /** Postings table `(token, <idCol>, tf)` over [[TextOps.tokens]] — one row
-    * per distinct (term, document). One explode + one two-phase hash agg. */
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol), explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy(col("token"), col(idCol))
-      .agg(count(lit(1)).as("tf"))
-
   /** BM25 per-term contribution. Parenthesization mirrors the DuckDB oracle
     * text exactly — float arithmetic is association-sensitive, so both
     * engines must build the same expression tree. */

@@ -63,11 +63,6 @@ object TextOps {
         .markerHits(tok, markers).cast(DoubleType) / size(tok).cast(DoubleType))
       .otherwise(lit(0.0))
 
-  /** Stopword-hit score for one language: fraction of tokens in the marker
-    * set. */
-  def langScore(text: Column, markers: Seq[String]): Column =
-    langScoreFromTokens(tokens(text), markers)
-
   /** An internal column name whose every derived variant (`<name><suffix>`
     * for the given suffixes) is absent from `df` — `withColumn` on a fixed
     * "__tok" would silently clobber a user column of that name, and langId's

@@ -68,6 +68,14 @@ class CastGroupKeySpec extends SparkTestBase {
         assert(msg.contains(KernelGuard.ConfKey) && msg.contains("cast_id=c1"),
           s"$name: $msg")
       }
+      // a cap that is not a positive integer is refused when the op is
+      // built, before any action, naming the key and the value
+      for (bad <- Seq("abc", "0", "-5"); (name, op) <- kernels) {
+        spark.conf.set(KernelGuard.ConfKey, bad)
+        val e = intercept[IllegalArgumentException](op(oneGroup))
+        assert(e.getMessage.contains(KernelGuard.ConfKey) &&
+          e.getMessage.contains(s"'$bad'"), s"$name, $bad: ${e.getMessage}")
+      }
     } finally spark.conf.unset(KernelGuard.ConfKey)
   }
 }

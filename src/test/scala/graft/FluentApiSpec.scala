@@ -53,349 +53,24 @@ class FluentApiSpec extends SparkTestBase {
     assert(a == b, "fluent chain diverged from explicit composition")
   }
 
-  test("pipeline fluent chain == explicit composition on a doc corpus") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{DedupOps, SampleOps, TextOps}
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog again and again"),
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "a completely different document about spark query planning"),
-      (3L, "short text")
-    ).toDF("doc_id", "text")
-
-    val fluent = docs
-      .exactDedup()
-      .normalizeText()
-      .qualityScore()
-      .tokenCount()
-      .hashSplit(nSplits = 4)
-      .orderBy("doc_id").collect().toSeq
-
-    val explicitDf = {
-      val d0 = DedupOps.exactDedup(docs, "doc_id", "text")
-      val d1 = d0.withColumn("text_norm", TextOps.normalizeText(col("text")))
-      val d2 = TextOps.qualityScore(d1, "text")
-      val d3 = d2.withColumn("n_tokens", TextOps.tokenCount(col("text")))
-      SampleOps.hashSplit(d3, "doc_id", 4)
-    }.orderBy("doc_id").collect().toSeq
-
-    assert(fluent.nonEmpty && fluent == explicitDf)
-    // dedup kept the lower id of the duplicate pair
-    assert(!fluent.map(_.getLong(0)).contains(1L))
-
-    // round-7 additions: featurize -> score, chunk with provenance columns
-    val w = Array.tabulate(32)(b => (b % 5 - 2) / 64.0)
-    val scored = docs.scoreLinear(w, bias = 0.125)
-      .orderBy("doc_id").collect().toSeq
-    val scoredExplicit = TextOps.scoreLinear(docs, "doc_id", "text", w, 0.125)
-      .orderBy("doc_id").collect().toSeq
-    assert(scored == scoredExplicit && scored.size == 4)
-    val tfidf = docs.hashingTfIdf(dim = 32).orderBy("doc_id", "bucket")
-      .collect().toSeq
-    assert(tfidf == TextOps.hashingTfIdf(docs, "doc_id", "text", 32)
-      .orderBy("doc_id", "bucket").collect().toSeq)
-    val chunks = docs.chunkDocuments(maxTokens = 4, keep = Seq("text"))
-    assert(chunks.columns.toSeq ==
-      Seq("doc_id", "text", "chunk_id", "chunk_text", "n_chunk_tokens",
-        "char_start", "char_end"))
-
-    // incremental-ingest dedup family mirrors the explicit ops
-    val landed = Seq((100L,
-      "the quick brown fox jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text")
-    val againstFluent = docs.nearDedupAgainst(landed, threshold = 0.5)
-      .orderBy("doc_id").collect().toSeq
-    val againstExplicit = DedupOps.nearDedupAgainst(docs, "doc_id", "text",
-        landed, "text", threshold = 0.5)
-      .orderBy("doc_id").collect().toSeq
-    assert(againstFluent == againstExplicit &&
-      !againstFluent.map(_.getLong(0)).exists(Set(0L, 1L)),
-      "both copies of the landed doc must drop via the fluent path")
-    assert(docs.exactDedupAgainst(landed).orderBy("doc_id").collect().toSeq ==
-      DedupOps.exactDedupAgainst(docs, "text", landed, "text")
-        .orderBy("doc_id").collect().toSeq)
-  }
-
-  test("wave-2 fluent methods mirror their explicit operators") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{EventOps, SampleOps, TextOps}
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "src0", "alpha beta gamma alpha", 22L),
-      (1L, "src0", "alpha beta", 10L),
-      (2L, "src1", "delta epsilon zeta", 18L)
-    ).toDF("doc_id", "source", "text", "n_tok")
-    assert(docs.distinctTokens("source").orderBy("source").collect().toSeq ==
-      TextOps.distinctTokens(docs, "source", "text").orderBy("source")
-        .collect().toSeq)
-    assert(docs.compressionRatio().select("compression_ratio").collect()
-      .forall(!_.isNullAt(0)))
-    assert(docs.assignShards(4).orderBy("doc_id").collect().toSeq ==
-      SampleOps.assignShards(docs, "doc_id", 4).orderBy("doc_id")
-        .collect().toSeq)
-    assert(docs.resampleToMixtureTokens("source", "n_tok",
-        Map("src0" -> 0.5, "src1" -> 0.5), totalTokens = 50)
-      .orderBy("doc_id", "epoch").collect().toSeq ==
-      SampleOps.resampleToMixtureTokens(docs, "doc_id", "source", "n_tok",
-        Map("src0" -> 0.5, "src1" -> 0.5), 50)
-        .orderBy("doc_id", "epoch").collect().toSeq)
-    assert(docs.weightedSampleByHash("n_tok").collect().length ==
-      SampleOps.weightedSampleByHash(docs, "doc_id", "n_tok").collect().length)
-
-    val ev = Seq((1L, 10L, new java.sql.Timestamp(1000L)),
-      (2L, 10L, new java.sql.Timestamp(5000000L)),
-      (3L, 11L, new java.sql.Timestamp(2000L)))
-      .toDF("event_id", "user_id", "ts")
-    assert(ev.sessionize(gapSeconds = 1800).orderBy("event_id").collect().toSeq ==
-      EventOps.sessionize(ev, "user_id", "ts", "event_id", 1800)
-        .orderBy("event_id").collect().toSeq)
-    assert(ev.retention(cohortWidthSeconds = 3600, horizonPeriods = 5)
-      .collect().toSet ==
-      EventOps.retention(ev, "user_id", "ts", 3600, 5).collect().toSet)
-    assert(ev.funnel(Seq("any" -> lit(true))).collect().toSeq ==
-      EventOps.funnel(ev, "user_id", "ts", Seq("any" -> lit(true)))
-        .collect().toSeq)
-  }
-
-  test("fluent wave-4 surface delegates to the operator objects") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{GraphOps, JoinOps, SimOps, SketchOps, StatsOps, TextOps}
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "<p>alpha</p><a href=x>link</a>"),
-      (1L, "beta beta gamma")
-    ).toDF("doc_id", "text")
-    assert(docs.stripMarkup().select("clean_text").collect().map(_.getString(0)).toSeq ==
-      docs.select(TextOps.stripMarkup($"text")).collect().map(_.getString(0)).toSeq)
-    assert(docs.linkDensity().select("link_density").collect().map(_.getDouble(0)).toSeq ==
-      docs.select(TextOps.linkDensity($"text")).collect().map(_.getDouble(0)).toSeq)
-    assert(docs.keySkewProfile("text", k = 2, nPartitions = 4).collect().toSeq ==
-      StatsOps.keySkewProfile(docs, "text", 2, 4).collect().toSeq)
-    val occ = Seq("a", "a", "b").toDF("k")
-    val sk = occ.cmsSketch("k", 2, 16)
-    assert(sk.collect().toSet ==
-      SketchOps.cmsSketch(occ, "k", 2, 16).collect().toSet)
-    assert(occ.distinct().cmsEstimate(sk, "k", 2, 16).collect().toSet ==
-      SketchOps.cmsEstimate(sk, occ.distinct(), "k", 2, 16).collect().toSet)
-    val e = Seq((1L, 2L), (2L, 1L)).toDF("s", "d")
-    assert(e.pageRank("s", "d", iters = 2).collect().toSet ==
-      GraphOps.pageRank(e, "s", "d", 2).collect().toSet)
-    val emb = Seq((1L, 0, Array(1.0f, 2.0f)), (2L, 0, Array(3.0f, 4.0f)))
-      .toDF("vec_id", "label", "embedding")
-    assert(emb.standardizeEmbeddings().collect().toSet ==
-      SimOps.standardizeEmbeddings(emb, "vec_id", "label", "embedding")
-        .collect().toSet)
-    val pts = Seq((5L, "p")).toDF("x", "t")
-    val ivs = Seq((1L, 0L, 10L)).toDF("iid", "lo", "hi")
-    assert(pts.intervalJoin(ivs, "x", "lo", "hi", 10L).collect().toSeq ==
-      JoinOps.intervalJoin(pts, ivs, "x", "lo", "hi", 10L).collect().toSeq)
-    val dim = Seq(("p", 1L)).toDF("t", "attr")
-    assert(pts.saltedJoin(dim, "t", Map("p" -> 2), rowCol = "x")
-      .collect().toSeq ==
-      JoinOps.saltedJoin(pts, dim, "t", "x", Map("p" -> 2)).collect().toSeq)
-  }
-
-  test("fluent wave-5 surface delegates to the operator objects") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{DedupOps, EventOps, SimOps, SketchOps, StatsOps, TextOps}
-    import spark.implicits._
-    val docs = Seq((0L, "alpha beta"), (1L, "alpha beta")).toDF("doc_id", "text")
-    assert(docs.profileColumns().collect().toSeq ==
-      StatsOps.profileColumns(docs).collect().toSeq)
-    val urls = Seq(Tuple1("HTTP://WWW.A.com/x?utm_a=1")).toDF("url")
-    assert(urls.canonicalizeUrls().select("canonical_url")
-      .collect().map(_.getString(0)).toSeq ==
-      urls.select(TextOps.canonicalizeUrl($"url"))
-        .collect().map(_.getString(0)).toSeq)
-    val mapping = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "canonical_id")
-    assert(mapping.clusterSizeHistogram().collect().toSeq ==
-      DedupOps.clusterSizeHistogram(mapping).collect().toSeq)
-    val probes = Seq(Tuple1("alpha beta")).toDF("text")
-    assert(docs.contaminationReport(probes, shingleSize = 2)
-      .collect().toSet ==
-      DedupOps.contaminationReport(docs, "doc_id", "text", probes, "text", 2)
-        .collect().toSet)
-    val ev = Seq((1L, 10L, 7L, 2.0), (2L, 20L, 7L, 4.0))
-      .toDF("event_id", "ts", "user_id", "value")
-    assert(ev.ewma("value").collect().toSet ==
-      EventOps.ewma(ev, "user_id", "ts", "event_id", "value").collect().toSet)
-    val words = Seq.fill(10)("w").toDF("k")
-    assert(words.heavyHitters("k", 3).collect().toSeq ==
-      SketchOps.heavyHitters(words, "k", 3).collect().toSeq)
-    val emb = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
-    assert(emb.kmeansAssignInt(k = 2, iters = 1).collect().toSet ==
-      SimOps.kmeansAssignInt(emb, "vec_id", "embedding", 2, 1).collect().toSet)
-    assert(emb.marginMutualMatches(emb).collect().toSet ==
-      SimOps.marginMutualMatches(emb, emb, "vec_id", "embedding").collect().toSet)
-  }
-
-  test("fluent wave-6 surface delegates to the operator objects") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{EventOps, SimOps, TextOps}
-    import spark.implicits._
-    val docs = Seq(("s1", 1L, "alpha beta"), ("s2", 2L, "alpha gamma"))
-      .toDF("source", "doc_id", "text")
-    assert(docs.distinctiveTerms(k = 2).collect().toSet ==
-      TextOps.distinctiveTerms(docs, "source", "text", 2).collect().toSet)
-    assert(docs.tokenDrift(docs).collect().toSet ==
-      TextOps.tokenDrift(docs, docs, "text").collect().toSet)
-    val emb = Seq((1L, 0, Array(1.0f, 0.0f)), (2L, 0, Array(0.9f, 0.1f)),
-      (3L, 0, Array(0.8f, 0.2f))).toDF("vec_id", "label", "embedding")
-    assert(emb.embeddingOutliers().collect().toSet ==
-      SimOps.embeddingOutliers(emb, "vec_id", "label", "embedding")
-        .collect().toSet)
-    val ev = Seq((new java.sql.Timestamp(1700000000000L), "a", 1.0))
-      .toDF("ts", "event_type", "value")
-    assert(ev.hoppingStats(3600, 900).collect().toSet ==
-      EventOps.hoppingStats(ev, "ts", "event_type", "value", 3600, 900)
-        .collect().toSet)
-  }
-
-  test("fluent wave-7 surface delegates to the operator objects") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{DedupOps, EventOps, StatsOps}
-    import spark.implicits._
-    val l = Seq((1L, Seq("a", "b", "c"))).toDF("doc_id", "s")
-    val r = Seq((2L, Seq("a", "b", "d"))).toDF("doc_id", "s")
-    assert(l.setSimilarityJoin(r, "s", 500).collect().toSeq ==
-      DedupOps.setSimilarityJoin(l, "doc_id", r, "doc_id", "s", 500)
-        .collect().toSeq)
-    val lk = Seq(1L, 1L).toDF("k")
-    val rk = Seq(1L).toDF("j")
-    assert(lk.joinCardinality(rk, "k", "j").collect().toSeq ==
-      StatsOps.joinCardinality(lk, rk, "k", "j").collect().toSeq)
-    val ev7 = Seq(
-      (7L, new java.sql.Timestamp(1L), 1L, "a"),
-      (7L, new java.sql.Timestamp(2L), 2L, "b"),
-      (7L, new java.sql.Timestamp(3L), 3L, "c"))
-      .toDF("user_id", "ts", "event_id", "event_type")
-    assert(ev7.sessionPaths(1800).collect().toSeq ==
-      EventOps.sessionPaths(ev7, "user_id", "ts", "event_id",
-        "event_type", 1800).collect().toSeq)
-    val df7 = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
-    val seg = df7.profileSegment(Seq("id", "s"))
-    assert(seg.mergeProfileSegments(Seq("id", "s")).collect().toSeq ==
-      StatsOps.mergeProfileSegments(
-        StatsOps.profileSegment(df7, Seq("id", "s")), Seq("id", "s"))
-        .collect().toSeq)
-  }
-
-  test("fluent wave-8 surface delegates to the operator objects") {
-    import graft.ops.pipeline.implicits._
-    import graft.ops.{DedupOps, EventOps, SampleOps}
-    import spark.implicits._
-    val docs = (0 until 40).map(i =>
-      (i.toLong, if (i < 30) "big" else "small", s"tok$i words here"))
-      .toDF("doc_id", "source", "text")
-    assert(docs.temperatureSample("source", 0.5, 20).select("doc_id")
-        .collect().toSeq.sortBy(_.getLong(0)) ==
-      SampleOps.temperatureSampleByHash(docs, "doc_id", "source", 0.5, 20)
-        .select("doc_id").collect().toSeq.sortBy(_.getLong(0)))
-    val other = Seq((99L, "x", "tok1 words here")).toDF("doc_id", "source", "text")
-    assert(docs.corpusContainment(other).collect().toSeq ==
-      DedupOps.corpusContainment(docs, "text", other, "text")
-        .collect().toSeq)
-    val ev8 = Seq((new java.sql.Timestamp(1000L), "a", 1.0))
-      .toDF("ts", "event_type", "value")
-    val base8 = Seq(("a", 1.0, 0.5)).toDF("event_type", "mu", "sigma")
-    assert(ev8.rateSpikesAgainstBaseline(base8).collect().toSeq ==
-      EventOps.rateSpikesAgainstBaseline(ev8, base8, "ts", "event_type",
-        "value", 3600, 900).collect().toSeq)
-  }
-
   test("fluent gate surface delegates to GateOps; gateKeep drops the " +
        "report columns and keeps survivors only") {
-    import graft.ops.pipeline.implicits._
+    // The gate surface is GateOps itself: gateKeep is gate filtered on
+    // `kept` with the report columns dropped, and gateFunnel attributes each
+    // dropped row to its first failing rule.
     import graft.ops.GateOps
-    import org.apache.spark.sql.functions.{col, length}
     import spark.implicits._
     val docs = Seq((1L, "long enough text right here"), (2L, "no"))
       .toDF("doc_id", "text")
     val rules = Seq("min_chars" -> (length(col("text")) >= 10))
-    assert(docs.gate(rules).collect().toSeq ==
-      GateOps.gate(docs, rules).collect().toSeq)
-    assert(docs.gateFunnel(rules).collect().toSeq ==
-      GateOps.gateFunnel(docs, rules).collect().toSeq)
-    val kept = docs.gateKeep(rules)
+    val verdicts = GateOps.gate(docs, rules)
+    assert(verdicts.filter(col("kept")).select("doc_id", "text")
+      .collect().toSeq ==
+      GateOps.gateKeep(docs, rules).collect().toSeq)
+    assert(GateOps.gateFunnel(docs, rules).collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(0L, "min_chars", 2L, 1L, 1L, 1L)))
+    val kept = GateOps.gateKeep(docs, rules)
     assert(kept.columns.toSeq == Seq("doc_id", "text"))
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
-  }
-
-  test("fluent wrappers delegate for paragraphDedup, batch BM25 / hard " +
-       "negatives, and domain quality ranking") {
-    import graft.ops.pipeline.implicits._
-    import spark.implicits._
-    val docs = Seq((1L, "alpha beta"), (2L, "alpha beta"), (3L, "gamma delta"))
-      .toDF("doc_id", "text")
-    assert(docs.paragraphDedup(delimiter = " ").collect().toSet ==
-      graft.ops.DedupOps.paragraphDedup(docs, "doc_id", "text", " ")
-        .collect().toSet)
-    val qs = Seq((0L, "alpha")).toDF("qid", "qtext")
-    assert(docs.bm25TopKPerQuery(qs, k = 2).collect().toSeq ==
-      graft.ops.SearchOps.bm25TopKPerQuery(docs, "doc_id", "text",
-        qs, "qid", "qtext", k = 2).collect().toSeq)
-    val pos = Seq((0L, 1L)).toDF("qid", "doc_id")
-    assert(docs.mineHardNegatives(qs, pos, k = 2).collect().toSeq ==
-      graft.ops.SearchOps.mineHardNegatives(docs, "doc_id", "text",
-        qs, "qid", "qtext", pos, k = 2).collect().toSeq)
-    val withUrl = docs.withColumn("url",
-      org.apache.spark.sql.functions.lit("https://a.example.com/"))
-      .withColumn("m", col("doc_id") * 2)
-    assert(withUrl.domainQualityRanking("m").collect().toSeq ==
-      graft.ops.TextOps.domainQualityRanking(withUrl, "url", "m")
-        .collect().toSeq)
-    val store = "graft_fluent_para_store"
-    Seq("_meta", "_paras").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $store$s"))
-    try {
-      graft.ops.DedupOps.landParagraphStore(
-        docs.limit(1), "text", store, delimiter = " ")
-      assert(docs.paragraphDedupAgainstStore(store).collect().toSet ==
-        graft.ops.DedupOps.paragraphDedupAgainstStore(docs, "doc_id",
-          "text", store).collect().toSet)
-    } finally Seq("_meta", "_paras").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $store$s"))
-  }
-
-  test("wave-8 fluent wrappers delegate exactly: unimax -> budget gate, " +
-       "leakage split, length batches, interleave, sweep") {
-    import spark.implicits._
-    import graft.ops.pipeline.implicits._
-    val docs = (0L until 40L)
-      .map(i => (i, s"g${i % 2}", 10L + i))
-      .toDF("doc_id", "grp", "n_tok")
-    val counts = docs.groupBy(col("grp"))
-      .agg(org.apache.spark.sql.functions.sum(col("n_tok")).as("toks"))
-    val budgets = counts.unimaxBudgets("grp", "toks", 500L, 2000000L)
-    assert(budgets.collect().toSet ==
-      graft.ops.SampleOps.unimaxBudgets(counts, "grp", "toks", 500L,
-        2000000L).collect().toSet)
-    assert(docs.sampleToBudgets("doc_id", "grp", budgets).collect().toSet ==
-      graft.ops.SampleOps.sampleToBudgets(docs, "doc_id", "grp", budgets)
-        .collect().toSet)
-    val canon = Seq((3L, 1L)).toDF("doc_id", "canonical_id")
-    assert(docs.leakageFreeSplit(canon, 10).collect().toSet ==
-      graft.ops.SampleOps.leakageFreeSplit(docs, "doc_id", canon, 10)
-        .collect().toSet)
-    assert(docs.lengthBucketBatches("n_tok", Seq(30L), 8).collect().toSet ==
-      graft.ops.SampleOps.lengthBucketBatches(docs, "doc_id", "n_tok",
-        Seq(30L), 8).collect().toSet)
-    val w = Map("g0" -> 2.0, "g1" -> 1.0)
-    assert(docs.mixtureInterleave("grp", w).collect().toSet ==
-      graft.ops.SampleOps.mixtureInterleave(docs, "doc_id", "grp", w)
-        .collect().toSet)
-    assert(docs.thresholdSweep("n_tok", "n_tok", Seq(20L, 40L))
-        .collect().toSet ==
-      graft.ops.GateOps.thresholdSweep(docs, "n_tok", "n_tok",
-        Seq(20L, 40L)).collect().toSet)
-    val emb8 = (0L until 8L)
-      .map(i => (i, Array((i % 2).toFloat, 1.0f - (i % 2))))
-      .toDF("vec_id", "embedding")
-    assert(emb8.prototypeSelect(k = 2, iters = 1, perCluster = 2)
-        .collect().toSet ==
-      graft.ops.SimOps.prototypeSelect(emb8, "vec_id", "embedding",
-        2, 1, 2).collect().toSet)
   }
 }
