@@ -486,38 +486,36 @@ object Parsers {
     case _                          => DoubleType
   }
 
+  /** First read of a Seabird header sweep: the fixture headers are
+    * 12–14 KB, the instrument-config blocks that outgrow it escalate. */
+  private val SeabirdHeadBytes = 1 << 14
+
   /**
-   * Header text guaranteed to cover the full header: Seabird headers end at
-   * `*END*`, and a config block (embedded XML instrument history) can exceed
-   * the default capped read — a silently truncated header would infer an
-   * empty schema or count header lines as data rows. Escalates the cap 4x
-   * until the marker appears or the file stops growing (no marker at EOF =
-   * genuinely malformed; downstream raises the usual parse error).
+   * Header text guaranteed to cover the full header. Seabird (cnv/ros)
+   * headers end at `*END*`, and a config block (embedded XML instrument
+   * history) can be far longer than a typical header, while a silently
+   * truncated header would infer an empty schema or count header lines as
+   * data rows: the read starts at 16 KB and escalates 4x until the `*END*`
+   * line appears or the file ends (no marker at EOF = genuinely malformed;
+   * downstream raises the usual parse error), and the text stops at that
+   * line — the data rows behind it are never decoded or split at planning
+   * time. Other formats read the capped `RawFile.headText` prefix.
    */
-  def headTextComplete(ftype: String, path: String): String = {
-    var cap  = 1 << 18
-    var text = RawFile.headText(path, cap)
-    if (ftype == "cnv" || ftype == "ros") {
-      var prev = -1
-      while (!text.contains("*END*") && text.length > prev) {
-        prev = text.length
-        cap *= 4
+  def headTextComplete(ftype: String, path: String): String =
+    if (ftype != "cnv" && ftype != "ros") RawFile.headText(path)
+    else
+      RawFile.headTextThrough(path, "*END*", SeabirdHeadBytes,
+        RawFile.defaultMaxFileBytes).getOrElse(
         // a marker-less multi-GB junk file must not escalate into a
         // whole-file driver read at PLANNING time — same cap (and same
         // loud error) as the data-path guard; onCorrupt=skip's planning
         // catch composes here like any other unreadable header
-        if (cap.toLong > RawFile.defaultMaxFileBytes)
-          throw new IllegalStateException(
-            s"$path: no *END* header marker within " +
-              s"${RawFile.defaultMaxFileBytes} bytes — malformed header or " +
-              s"not a $ftype file; raise -D${RawFile.MaxBytesProp} if the " +
-              "header is genuinely that large, or drop the file with " +
-              "onCorrupt=skip")
-        text = RawFile.headText(path, cap)
-      }
-    }
-    text
-  }
+        throw new IllegalStateException(
+          s"$path: no *END* header marker within " +
+            s"${RawFile.defaultMaxFileBytes} bytes — malformed header or " +
+            s"not a $ftype file; raise -D${RawFile.MaxBytesProp} if the " +
+            "header is genuinely that large, or drop the file with " +
+            "onCorrupt=skip"))
 
   /**
    * Schema WITHOUT materializing data rows — planning-time inference reads
@@ -568,7 +566,7 @@ object Parsers {
   }
 
   /** Cast metadata without decompressing the file end-to-end into a String:
-    * header from the capped `RawFile.headText` prefix, n_rows from the
+    * header from [[headTextComplete]] (read through `*END*`), n_rows from the
     * streaming byte-level `RawFile.lineCount`. Non-Seabird formats fall back
     * to the full parse (their files are KBs). */
   def metaOnlyStreaming(ftype: String, path: String): CastMetaRow = ftype match {

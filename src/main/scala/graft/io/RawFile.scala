@@ -143,14 +143,69 @@ object RawFile {
       var off = 0
       var n = in.read(buf, off, maxBytes - off)
       while (n > 0 && off < maxBytes) { off += n; n = in.read(buf, off, maxBytes - off) }
-      val truncated = off >= maxBytes
-      var end = off
-      if (truncated) {
-        while (end > 0 && buf(end - 1) != '\n'.toByte && buf(end - 1) != '\r'.toByte) end -= 1
-        if (end == 0) end = off // no newline in the head at all — keep as-is
-      }
-      decode(java.util.Arrays.copyOf(buf, end))
+      decodeHead(buf, off, truncated = off >= maxBytes)
     } finally in.close()
+  }
+
+  /** Decoded `buf(0 until off)`; a truncated head is cut at its last full
+    * line first, so a split multi-byte char can't corrupt the charset sniff. */
+  private def decodeHead(buf: Array[Byte], off: Int, truncated: Boolean): String = {
+    var end = off
+    if (truncated) {
+      while (end > 0 && buf(end - 1) != '\n'.toByte && buf(end - 1) != '\r'.toByte) end -= 1
+      if (end == 0) end = off // no newline in the head at all — keep as-is
+    }
+    decode(java.util.Arrays.copyOf(buf, end))
+  }
+
+  /**
+   * Decoded text of the file through the end of its first line that trims
+   * to `marker` (a Seabird header ends at `*END*`): planning reads the
+   * header, not a fixed prefix of the data behind it. One open stream is
+   * read into a buffer of `firstBytes` that grows 4x while the marker is
+   * missing; each round decodes the whole prefix, cut at its last full line
+   * as in [[headText]], so the charset sniff sees the same bytes a single
+   * read of that size would. The whole text when the file ends first;
+   * `None` when the buffer would grow past `maxBytes` without the marker.
+   */
+  def headTextThrough(path: String, marker: String, firstBytes: Int,
+                      maxBytes: Long): Option[String] = {
+    val in = openDecompressed(path)
+    try {
+      var buf = new Array[Byte](firstBytes)
+      var off = 0
+      var eof = false
+      var result: Option[String] = null
+      while (result == null) {
+        while (!eof && off < buf.length) {
+          val n = in.read(buf, off, buf.length - off)
+          if (n < 0) eof = true else off += n
+        }
+        val text = decodeHead(buf, off, truncated = !eof)
+        val cut = lineEndOf(text, marker)
+        val grown = buf.length.toLong * 4
+        if (cut >= 0) result = Some(text.substring(0, cut))
+        else if (eof) result = Some(text)
+        else if (grown > maxBytes || grown > Int.MaxValue - 8) result = None
+        else buf = java.util.Arrays.copyOf(buf, grown.toInt)
+      }
+      result
+    } finally in.close()
+  }
+
+  /** End offset (exclusive, before its terminator) of the first line of
+    * `text` that trims to `marker`, or -1. */
+  private def lineEndOf(text: String, marker: String): Int = {
+    var at = text.indexOf(marker)
+    while (at >= 0) {
+      var s = at
+      while (s > 0 && text.charAt(s - 1) != '\n' && text.charAt(s - 1) != '\r') s -= 1
+      var e = at + marker.length
+      while (e < text.length && text.charAt(e) != '\n' && text.charAt(e) != '\r') e += 1
+      if (text.substring(s, e).trim == marker) return e
+      at = text.indexOf(marker, e)
+    }
+    -1
   }
 
   /** Effective line count of the file under `toLines` + drop-trailing-blank
@@ -318,5 +373,24 @@ object RawFile {
   /** Decompressed, decoded, split to lines (any of \r\n, \n, \r). */
   def lines(path: String): Array[String] = toLines(decode(bytes(path)))
 
-  def toLines(text: String): Array[String] = text.split("\r\n|\n|\r", -1)
+  /** `text.split("\r\n|\n|\r", -1)` as a char scan: `\r\n` is one
+    * separator, a lone `\r` or `\n` another; a leading, trailing or
+    * repeated separator yields an empty line, and "" is one empty line. */
+  def toLines(text: String): Array[String] = {
+    val out = new java.util.ArrayList[String]()
+    val n = text.length
+    var start = 0
+    var i = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      if (c == '\n' || c == '\r') {
+        out.add(text.substring(start, i))
+        if (c == '\r' && i + 1 < n && text.charAt(i + 1) == '\n') i += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    out.add(text.substring(start, n))
+    out.toArray(new Array[String](out.size))
+  }
 }

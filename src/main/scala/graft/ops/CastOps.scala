@@ -35,9 +35,10 @@ object Cast {
    * is the upcast. Reference: ctd/processing.py:38-46 (`split`), which slices
    * `[0, argmax]` / `(argmax, end]` positionally.
    *
-   * Relational form: one window over `castCol` — no sequential kernel needed.
-   * The reference also REVERSES the upcast; in Spark row order is a sort
-   * downstream, so we expose `direction` and leave ordering to the caller.
+   * Relational form: windows over `castCol`, added as ONE column — no
+   * sequential kernel needed. The reference also REVERSES the upcast; in
+   * Spark row order is a sort downstream, so we expose `direction` and
+   * leave ordering to the caller.
    */
   def split(df: DataFrame, castCol: String, orderCol: String,
             pressure: String = "pressure"): DataFrame = {
@@ -47,9 +48,7 @@ object Cast {
     val pmax  = max(col(pressure)).over(wAll)
     // first row number attaining the max
     val argmax = min(when(col(pressure) === pmax, rn)).over(wAll)
-    df.withColumn("__rn", rn)
-      .withColumn("direction", when(col("__rn") <= argmax, lit("down")).otherwise(lit("up")))
-      .drop("__rn")
+    df.withColumn("direction", when(rn <= argmax, lit("down")).otherwise(lit("up")))
   }
 
   /**
@@ -156,16 +155,18 @@ object Cast {
     val wUnb = Window.partitionBy(col(castCol)).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val wRn = Window.partitionBy(col(castCol)).orderBy(col(orderCol))
-    val start = ceil(first(col(pressure)).over(wUnb)).cast(DoubleType)
-    val end = floor(last(col(pressure)).over(wUnb)).cast(DoubleType)
+    // one projection per dependency level, the window values and then what
+    // derives from them: each projection re-analyzes the whole plan
     val withEdges = df
-      .withColumn("__start", start)
-      .withColumn("__nbins",
-        (ceil((end - col("__start")) / lit(delta)) - lit(1)).cast("long"))
-      .withColumn("__rn", row_number().over(wRn))
-      .withColumn("__k",
+      .select(col("*"),
+        ceil(first(col(pressure)).over(wUnb)).cast(DoubleType).as("__start"),
+        floor(last(col(pressure)).over(wUnb)).cast(DoubleType).as("__end"),
+        row_number().over(wRn).as("__rn"))
+      .select(col("*"),
+        (ceil((col("__end") - col("__start")) / lit(delta)) - lit(1))
+          .cast("long").as("__nbins"),
         (ceil((col(pressure) - col("__start")) / lit(delta)) - lit(1))
-          .cast("long"))
+          .cast("long").as("__k"))
     val inBin = col(pressure) > col("__start") && col("__k") < col("__nbins")
     // each row explodes to the bins it feeds: an in-bin row to its own bin
     // and, with keepEmpty, each cast's __rn == 1 seed row to EVERY bin
@@ -198,18 +199,20 @@ object Cast {
    * (integer division) — odd w: symmetric +/-(w-1)/2; even w: [i-w/2, i+w/2-1].
    * A null inside the window propagates (numpy NaN arithmetic), unlike Spark's
    * null-ignoring sum — guarded explicitly.
+   *
+   * Every column is replaced in ONE projection (a column listed twice is
+   * averaged once).
    */
   def movingAverage(df: DataFrame, castCol: String, orderCol: String,
                     valueCols: Seq[String], windowSize: Int = 48): DataFrame = {
     val hi = (windowSize - 1) / 2
     val lo = hi - (windowSize - 1)
     val w = Window.partitionBy(castCol).orderBy(col(orderCol)).rowsBetween(lo, hi)
-    valueCols.foldLeft(df) { (d, c) =>
+    df.withColumns(valueCols.map { c =>
       val hasNull = count(lit(1)).over(w) > count(col(c)).over(w)
-      d.withColumn(c,
-        when(hasNull, lit(null).cast(DoubleType))
-          .otherwise(coalesce(sum(col(c)).over(w), lit(0.0)) / lit(windowSize.toDouble)))
-    }
+      c -> when(hasNull, lit(null).cast(DoubleType))
+        .otherwise(coalesce(sum(col(c)).over(w), lit(0.0)) / lit(windowSize.toDouble))
+    }.toMap)
   }
 
   /**
@@ -631,9 +634,14 @@ object Cast {
    * Closed form (equivalent because each inversion contributes its threshold
    * independently): row j is masked iff
    * `press[j] < max(press[k] : k < j, press[k+1] < press[k])` — a running
-   * max over inversion starts. One window, no sequential kernel; null/NaN
-   * pressures are never inversion starts and never masked (numpy NaN
-   * comparison semantics, guarded explicitly since Spark orders NaN last).
+   * max over inversion starts. No sequential kernel: the mask is a `lead`
+   * over the cast's scan order feeding a running max over the rows before
+   * each one (two window operators on one partitioning and sort, whatever
+   * the column count), computed once as a column; one projection then
+   * nulls every value column where it holds. A null or NaN pressure never
+   * starts an inversion and is never masked (numpy NaN comparison
+   * semantics, guarded explicitly since Spark orders NaN last); the
+   * pressure column is masked only if it is listed in `valueCols`.
    */
   def pressCheck(df: DataFrame, castCol: String, orderCol: String,
                  valueCols: Seq[String],
@@ -644,10 +652,10 @@ object Cast {
     val invRef = when(!isnan(p) && lead(p, 1).over(wOrd) < p, p)
     val runmax = max(invRef).over(wPrev)
     val mask   = coalesce(p < runmax, lit(false))
-    val masked = df.withColumn("__pc_mask", mask)
-    valueCols.foldLeft(masked) { (d, c) =>
-      d.withColumn(c, when(col("__pc_mask"), lit(null)).otherwise(col(c)))
-    }.drop("__pc_mask")
+    df.withColumn("__pc_mask", mask)
+      .withColumns(valueCols.map(c =>
+        c -> when(col("__pc_mask"), lit(null)).otherwise(col(c))).toMap)
+      .drop("__pc_mask")
   }
 
   /**
@@ -655,7 +663,8 @@ object Cast {
    * limit_area="inside")` — linear-in-pressure fill of nulls strictly BETWEEN
    * valid samples (both neighbors must exist). Reference: README.md:52-54.
    * Fully relational: previous/next non-null value+pressure via ignoreNulls
-   * window scans, then the two-point interpolation expression.
+   * window scans, then the two-point interpolation expression; every column
+   * is replaced in ONE projection, each against the input's pressure.
    */
   def interpolateIndex(df: DataFrame, castCol: String, orderCol: String,
                        valueCols: Seq[String], pressure: String = "pressure"): DataFrame = {
@@ -663,18 +672,17 @@ object Cast {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(castCol).orderBy(col(orderCol))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    valueCols.foldLeft(df) { (d, c) =>
+    df.withColumns(valueCols.map { c =>
       val pv = last(when(col(c).isNotNull, col(c)), ignoreNulls = true).over(wPrev)
       val pp = last(when(col(c).isNotNull, col(pressure)), ignoreNulls = true).over(wPrev)
       val nv = first(when(col(c).isNotNull, col(c)), ignoreNulls = true).over(wNext)
       val np = first(when(col(c).isNotNull, col(pressure)), ignoreNulls = true).over(wNext)
       val interp = pv + (nv - pv) * (col(pressure) - pp) / (np - pp)
-      d.withColumn(c,
-        when(col(c).isNotNull, col(c))
-          .when(pv.isNotNull && nv.isNotNull,
-            when(np === pp, pv).otherwise(interp))
-          .otherwise(lit(null).cast(DoubleType)))
-    }
+      c -> when(col(c).isNotNull, col(c))
+        .when(pv.isNotNull && nv.isNotNull,
+          when(np === pp, pv).otherwise(interp))
+        .otherwise(lit(null).cast(DoubleType))
+    }.toMap)
   }
 
   /** Mixed-layer-depth mask: `ct[0] - ct < delta` against the cast's first

@@ -72,10 +72,10 @@ object JoinOps {
     val filled = unioned
       .withColumn(rsCol, last(col(rsCol), ignoreNulls = true).over(w))
       .filter(col(tagCol) === 1)
-    val withOut = rightCols.zip(outNames).foldLeft(filled) {
-      case (d, (c, o)) => d.withColumn(o, col(s"$rsCol.$c"))
-    }
-    withOut.drop(tagCol, rsCol)
+    // the output names are checked new above: one projection appends them
+    filled.select(col("*") +: rightCols.zip(outNames).map {
+      case (c, o) => col(s"$rsCol.$c").as(o)
+    }: _*).drop(tagCol, rsCol)
   }
 
   /** Convenience single-column form of [[asofJoin]]. */

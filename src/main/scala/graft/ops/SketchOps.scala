@@ -225,9 +225,12 @@ object SketchOps {
       .replace(".", "_")
     val merged = sketches.groupBy(col(groupCol))
       .agg(Kll.kllMergeAgg(col("qsketch")).as("__merged"))
-    percentiles.foldLeft(merged) { (d, p) =>
-      d.withColumn(label(p), Kll.kllQuantile(col("__merged"), p))
-    }.drop("__merged")
+    // one projection; a label listed twice is one column, at its first
+    // position with its last percentile
+    val labels = percentiles.map(label).distinct
+    val rank = percentiles.map(p => label(p) -> p).toMap
+    merged.select(col("*") +: labels.map(l =>
+      Kll.kllQuantile(col("__merged"), rank(l)).as(l)): _*).drop("__merged")
   }
 
   /**

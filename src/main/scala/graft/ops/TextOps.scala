@@ -85,9 +85,10 @@ object TextOps {
       suffixes = LangMarkers.map { case (l, _) => s"_ls_$l" })
     def scoreCol(lang: String) = s"${tokCol}_ls_$lang"
     val withTok = df.withColumn(tokCol, tokens(col(textCol)))
-    val scored = LangMarkers.foldLeft(withTok) { case (d, (lang, markers)) =>
-      d.withColumn(scoreCol(lang), langScoreFromTokens(col(tokCol), markers))
-    }
+    // the score names are collision-checked above: one projection adds them
+    val scored = withTok.select(col("*") +: LangMarkers.map { case (lang, markers) =>
+      langScoreFromTokens(col(tokCol), markers).as(scoreCol(lang))
+    }: _*)
     val best = LangMarkers.map(_._1)
       .foldLeft(lit(null).cast(StringType) -> lit(-1.0)) {
         case ((bestLang, bestScore), lang) =>

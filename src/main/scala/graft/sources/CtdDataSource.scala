@@ -157,10 +157,13 @@ object CtdDataSource {
     if (n == CastIdCol || n == ScanOrderCol) n + "_" else n
 
   /** Union-by-name schema over all files, prefixed by (cast_id, scan_order).
-    * Planning-time inference is header-only (`Parsers.schemaOnly`) — data
-    * rows are never materialized on the driver — and the per-file header
-    * reads run on a bounded thread pool: serial O(files) I/O stalled
-    * planning on large drop directories (VERDICT r3). The union itself
+    * Planning-time inference reads headers only
+    * (`Parsers.headTextComplete`): a Seabird cnv/ros file is read through
+    * its `*END*` line and no further, the other formats a capped 256 KB
+    * prefix, and `Parsers.schemaOnly` takes the names from that text, so
+    * data rows are never parsed or materialized on the driver. The
+    * per-file header reads run on a bounded thread pool: serial O(files)
+    * I/O stalled planning on large drop directories (VERDICT r3). The union itself
     * folds in LISTING order, so the inferred schema is deterministic
     * regardless of completion order. For 10^5+-file corpora prefer an
     * explicit `.schema(...)`, which skips this sweep entirely. */
@@ -189,8 +192,8 @@ object CtdDataSource {
         try {
           c.files.map { f =>
             pool.submit(new java.util.concurrent.Callable[Option[StructType]] {
-              // capped header read (escalating until *END* for Seabird):
-              // planning must not decompress multi-MB casts
+              // header-only read: planning must not decompress
+              // multi-MB casts
               override def call(): Option[StructType] = headerSchema(f)
             })
           }.flatMap { fut =>

@@ -215,4 +215,22 @@ class CtdSourceSpec extends SparkTestBase {
       read(Map("maxFileBytes" -> "0")).count()
     }
   }
+
+  test("header-only sweep: a Seabird header longer than the first head " +
+       "read infers the same schema and rows through the source") {
+    val src = s"$dataDir/CTD_with_sigma_e00.cnv"
+    val text = graft.io.RawFile.decode(graft.io.RawFile.bytes(src))
+    val at = text.indexOf("*END*")
+    // ~200 KB of instrument-config lines before *END*
+    val pad = (0 until 5000).map(i => f"# <Sensor index='$i%05d' SensorID='3' />\n").mkString
+    val long = java.nio.file.Files.createTempDirectory("graft-longheader")
+      .resolve("long.cnv")
+    java.nio.file.Files.write(long,
+      (text.substring(0, at) + pad + text.substring(at)).getBytes("UTF-8"))
+    val plain = CtdRead.cnv(spark, src)
+    val padded = CtdRead.cnv(spark, long.toString)
+    assert(padded.schema == plain.schema)
+    assert(padded.count() == 199 && padded.exceptAll(plain).isEmpty &&
+      plain.exceptAll(padded).isEmpty)
+  }
 }

@@ -293,4 +293,120 @@ class ParserSpec extends AnyFunSuite {
     // byte-level line counting must detect the UTF-16 BOM and fall back
     assert(RawFile.lineCount(bomPath.toString) == RawFile.lineCount(src))
   }
+
+  test("toLines equals the CRLF|LF|CR regex split, empty lines kept") {
+    def oracle(t: String): Seq[String] = t.split("\r\n|\n|\r", -1).toSeq
+    val table = Seq(
+      "", "a", "\n", "\r", "\r\n", "\n\r", "\r\r\n", "\r\n\r\n",
+      "a\r\nb\nc\rd", "a\n\r\nb", "lead\r", "trail\n\n", "x\r\r",
+      "\nleading", "\r\nleading", "a\rb\r\n\r\n\rc\n",
+      "* header\r\n# name 0 = prDM: Pressure\r\n*END*\r\n 1.0 2.0\r\n",
+      // UTF-16-decoded text: surrogate pairs and non-ASCII beside separators
+      RawFile.decode(Array[Byte](0xFF.toByte, 0xFE.toByte) ++
+        "t\u00e9\r\n\ud83c\udf0a\r\u6c34\n\r".getBytes("UTF-16LE")),
+      RawFile.decode(Array[Byte](0xFE.toByte, 0xFF.toByte) ++
+        "\u00b0C\n\n\r\n".getBytes("UTF-16BE")))
+    table.foreach { t =>
+      assert(RawFile.toLines(t).toSeq == oracle(t), s"for ${t.map(_.toInt)}")
+    }
+    // seeded fuzz over an alphabet dense in separators
+    val rnd = new scala.util.Random(7)
+    val alphabet = "ab\r\n "
+    (0 until 2000).foreach { _ =>
+      val t = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      assert(RawFile.toLines(t).toSeq == oracle(t), s"for ${t.map(_.toInt)}")
+    }
+  }
+
+  /** The whole-file CNV `path` with `pad` inserted before its `*END*` line. */
+  private def cnvWithHeaderPad(path: String, pad: String): String = {
+    val text = RawFile.decode(RawFile.bytes(path))
+    val at = text.indexOf("*END*")
+    text.substring(0, at) + pad + text.substring(at)
+  }
+
+  private def writeTemp(name: String, text: String, gzip: Boolean = false): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-header")
+    val f = dir.resolve(name)
+    val bytes = text.getBytes("UTF-8")
+    if (!gzip) java.nio.file.Files.write(f, bytes)
+    else {
+      val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(f))
+      try out.write(bytes) finally out.close()
+    }
+    f.toString
+  }
+
+  test("header sweep: every fixture format infers the schema of a 256 KB " +
+       "prefix, and Seabird headers stop at their *END* line") {
+    val files = Seq("cnv" -> "CTD_with_sigma_e00.cnv",
+      "cnv" -> "press-pass-prDE.cnv", "cnv" -> "press-pass-prDM.cnv",
+      "cnv" -> "press-pass-prdM-atl.cnv", "cnv" -> "small.cnv.bz2",
+      "cnv" -> "CTD-spiked-unfiltered.cnv.bz2", "cnv" -> "CTD/g01l01s01.cnv.gz",
+      "ros" -> "CTD/g01l01s01.ros", "ros" -> "CTD/fixstation_hl_02.ros",
+      "btl" -> "btl/bottletest.btl", "edf" -> "XBT.EDF", "edf" -> "XBT.EDF.zip",
+      "btl" -> "btl/alt_bottletest.BTL", "edf" -> "C3_00005.edf",
+      "fsi" -> "FSI.txt.gz", "bl" -> "bl/bottletest.bl",
+      "castaway" -> "castaway_data.csv")
+    files.foreach { case (ftype, f) =>
+      val path = s"$data/$f"
+      val head = Parsers.headTextComplete(ftype, path)
+      assert(Parsers.schemaOnly(ftype, path, head) ==
+        Parsers.schemaOnly(ftype, path, RawFile.headText(path, 1 << 18)), s"for $f")
+      if (ftype == "cnv" || ftype == "ros") {
+        assert(RawFile.toLines(head).last.trim == "*END*", s"for $f")
+        assert(Parsers.schemaOnly(ftype, path, head) == load(ftype, path).schema,
+          s"for $f")
+      }
+    }
+  }
+
+  test("header sweep: a CNV header longer than the first head read " +
+       "escalates and infers the same schema") {
+    val src = s"$data/CTD_with_sigma_e00.cnv"
+    // ~200 KB of instrument-config lines: past the first read and its
+    // first 4x escalation
+    val pad = (0 until 5000).map(i => f"# <Sensor index='$i%05d' SensorID='3' />\n").mkString
+    val expected = load("cnv", src)
+    Seq(false, true).foreach { gz =>
+      val path = writeTemp(if (gz) "long.cnv.gz" else "long.cnv",
+        cnvWithHeaderPad(src, pad), gz)
+      val head = Parsers.headTextComplete("cnv", path)
+      assert(head.length > 200000 && RawFile.toLines(head).last.trim == "*END*")
+      assert(Parsers.schemaOnly("cnv", path, head) == expected.schema)
+      val meta = Parsers.metaOnlyStreaming("cnv", path)
+      assert(meta.nRows == expected.rows.length.toLong)
+      assert(meta == Parsers.metaOnly("cnv", path, RawFile.decode(RawFile.bytes(path))))
+    }
+  }
+
+  test("header sweep: a CNV with no *END* line reads to its end, and past " +
+       "the file cap fails with the cap message") {
+    val src = s"$data/CTD_with_sigma_e00.cnv"
+    val noEnd = RawFile.decode(RawFile.bytes(src)).replace("*END*", "*END")
+    // small: the whole file is the header text, as with the 256 KB prefix
+    val small = writeTemp("noend.cnv", noEnd)
+    assert(Parsers.headTextComplete("cnv", small) == noEnd)
+    // no channel names either: the parser's own error, unchanged
+    val bare = writeTemp("bare.cnv", "* Sea-Bird SBE 9 Data File:\n 1.0 2.0\n")
+    val e1 = intercept[IllegalArgumentException] {
+      Parsers.schemaOnly("cnv", bare, Parsers.headTextComplete("cnv", bare))
+    }
+    assert(e1.getMessage == "Expected one pressure/depth column, didn't receive any")
+    // longer than the cap: the planning-time cap error, word for word
+    val big = writeTemp("noend_big.cnv",
+      noEnd + (" 1.0 2.0 3.0 4.0\n" * 80000))
+    val saved = sys.props.get(RawFile.MaxBytesProp)
+    sys.props(RawFile.MaxBytesProp) = (1 << 20).toString
+    try {
+      val e2 = intercept[IllegalStateException](Parsers.headTextComplete("cnv", big))
+      assert(e2.getMessage == s"$big: no *END* header marker within 1048576 " +
+        "bytes — malformed header or not a cnv file; raise " +
+        "-Dgraft.read.maxFileBytes if the header is genuinely that large, " +
+        "or drop the file with onCorrupt=skip")
+    } finally saved match {
+      case Some(v) => sys.props(RawFile.MaxBytesProp) = v
+      case None    => sys.props -= RawFile.MaxBytesProp
+    }
+  }
 }

@@ -93,6 +93,29 @@ class PlanShapeSpec extends SparkTestBase {
     assert(countOccurrences(plan, "Sort [") == 1, plan)
   }
 
+  test("pressCheck, movingAverage and interpolateIndex analyze one " +
+       "projection per level: 26 value columns plan as many Projects as 2") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val cols = (0 until 26).map(i => s"v$i")
+    val base = spark.range(64).select(Seq(
+      (col("id") % 4).cast("string").as("cast_id"), col("id").as("scan_order"),
+      (col("id") % 16).cast("double").as("pressure")) ++
+        cols.zipWithIndex.map { case (c, i) =>
+          when(col("id") % (i + 3) === 0, lit(null)).otherwise(col("id") * 0.5).as(c)
+        }: _*)
+    val ops: Seq[(String, Seq[String] => org.apache.spark.sql.DataFrame)] = Seq(
+      "pressCheck" -> (vs => Cast.pressCheck(base, "cast_id", "scan_order", vs)),
+      "movingAverage" -> (vs => Cast.movingAverage(base, "cast_id", "scan_order", vs, 5)),
+      "interpolateIndex" -> (vs => Cast.interpolateIndex(base, "cast_id", "scan_order", vs)))
+    ops.foreach { case (name, op) =>
+      def projects(vs: Seq[String]) =
+        op(vs).queryExecution.analyzed.collect { case p: Project => p }.size
+      assert(projects(cols) == projects(cols.take(2)),
+        s"$name: ${projects(cols)} Projects over 26 columns, " +
+          s"${projects(cols.take(2))} over 2")
+    }
+  }
+
   test("two reads of one ctd source canonicalize equal: the shuffle of " +
        "the second is a ReusedExchange") {
     val raw = graft.sources.CtdRead.cnv(spark, s"$dataDir/CTD_with_sigma_e00.cnv")
